@@ -95,100 +95,6 @@ N_WORKLOAD_QUERIES = 200
 QUERY_BATCH = 50          # the Spark-idiomatic unit: one job per batch
 K = 10
 
-# --reuse-sidecars (round 11, VERDICT r10 #7): ITERATION mode — skip
-# retraining unchanged codebook rungs by caching trained books per
-# (block, rung) fingerprint across runs. Every bench corpus is
-# seeded-deterministic, so the (tag, params) key identifies the
-# training input exactly. Decision metrics (recall, scanned_frac) are
-# identical by construction — the cached books ARE the books a fresh
-# run would train; only *_train_s / sidecar_build_s drop. The default
-# run retrains everything (certification mode), and the cache lives
-# in /tmp (wiped on reboot, never committed).
-REUSE_SIDECARS = (os.environ.get("SPARK_GRAFT_REUSE_SIDECARS") == "1"
-                  or "--reuse-sidecars" in sys.argv)
-BOOKCACHE_DIR = "/tmp/qvss_bench_bookcache"
-
-
-def _cached_train(tag: str, train_fn):
-    """Trained-books cache for bare trainer calls. Returns
-    (books, seconds) — 0.0 s on a cache hit."""
-    path = os.path.join(BOOKCACHE_DIR, f"{tag}.npy")
-    if REUSE_SIDECARS and os.path.exists(path):
-        return np.load(path), 0.0
-    t0 = time.time()
-    books = train_fn()
-    dt = time.time() - t0
-    if REUSE_SIDECARS:
-        os.makedirs(BOOKCACHE_DIR, exist_ok=True)
-        np.save(path, books)
-    return books, dt
-
-
-def _harvest_sidecar_params(version_dir: str, kwargs: dict) -> dict:
-    """Collect EVERY trained artifact of the sidecar just built into
-    the dict-payload form build_pq_sidecar re-accepts (round 14,
-    VERDICT r13 #4): global books + rotation, per-cell books (+
-    per-cell rotations), or sq8 bounds — straight off the version
-    dir, so the payload IS what a fresh build trained."""
-    from quake_vector_search_spark.operators.quantization import (
-        load_local_books,
-        load_local_rots,
-        load_sq8_params,
-    )
-    if kwargs.get("sq8"):
-        return {"sq8_params": load_sq8_params(version_dir)}
-    if kwargs.get("local"):
-        payload = {"local_books": load_local_books(version_dir)}
-        if kwargs.get("rotate"):
-            payload["local_rots"] = load_local_rots(version_dir)
-        return payload
-    payload = {"books": np.load(os.path.join(version_dir,
-                                             "pq_codebooks.npy"))}
-    if kwargs.get("rotate"):
-        rz = np.load(os.path.join(version_dir, "pq_rotation.npz"))
-        payload["rotation"] = {"mean": rz["mean"],
-                               "components": rz["components"]}
-    return payload
-
-
-def _build_sidecar_cached(idx, tag: str, **kwargs):
-    """build_pq_sidecar with trained-params reuse under
-    --reuse-sidecars. Round 14 (VERDICT r13 #4): ALL flavors cache —
-    rotated/local/sq8 rungs ride the dict payload (rotations and
-    per-cell books persist alongside global books), so iteration
-    runs skip the aniso×OPQ alternation and the per-cell fits too.
-    Valid ONLY because every bench corpus AND index build is
-    seeded-deterministic (per-cell books are layout-bound). Callers
-    must NOT use this where the corpus mutates between runs (e.g.
-    the post-insert streamed_ood rebuild)."""
-    from quake_vector_search_spark.operators.quantization import (
-        build_pq_sidecar,
-    )
-    if not REUSE_SIDECARS:
-        return build_pq_sidecar(idx, **kwargs)
-    import hashlib
-    import json as _json
-    import pickle
-
-    # the params ride the cache key: a rung whose kwargs change
-    # without a tag rename must MISS, not serve the old flavor's
-    # books (round 14)
-    sig = hashlib.md5(_json.dumps(kwargs, sort_keys=True,
-                                  default=str).encode()).hexdigest()[:10]
-    path = os.path.join(BOOKCACHE_DIR, f"{tag}.{sig}.params.pkl")
-    if os.path.exists(path):
-        with open(path, "rb") as fh:
-            payload = pickle.load(fh)
-        return build_pq_sidecar(idx, pretrained_books=payload,
-                                **kwargs)
-    out = build_pq_sidecar(idx, **kwargs)
-    os.makedirs(BOOKCACHE_DIR, exist_ok=True)
-    payload = _harvest_sidecar_params(idx.version_dir, kwargs)
-    with open(path, "wb") as fh:
-        pickle.dump(payload, fh)
-    return out
-
-
 def run_df(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
@@ -278,13 +184,12 @@ def aniso_mips_n40k(spark) -> dict:
         out["encode_s"] = round(enc_s, 3)
         return out
 
-    books_p, plain_train_s = _cached_train(
-        f"aniso40k_plain_m{m}k{ksub}",
-        lambda: pq_train(embn, m=m, ksub=ksub, seed=99))
-    books_a, aniso_train_s = _cached_train(
-        f"aniso40k_eta3_m{m}k{ksub}",
-        lambda: aniso_pq_train(embn, m=m, ksub=ksub, eta=3.0,
-                               seed=99))
+    t0 = time.time()
+    books_p = pq_train(embn, m=m, ksub=ksub, seed=99)
+    plain_train_s = time.time() - t0
+    t0 = time.time()
+    books_a = aniso_pq_train(embn, m=m, ksub=ksub, eta=3.0, seed=99)
+    aniso_train_s = time.time() - t0
 
     # RESIDUAL composition at the same byte budget: IVFADC codes with
     # score-aware directions (normalize(r + c_p)) vs direction-less
@@ -334,9 +239,8 @@ def aniso_mips_n40k(spark) -> dict:
                            {"anisotropic": 3.0, "residual": True,
                             "local": True, "rotate": True})):
         t0 = time.time()
-        books_r = _build_sidecar_cached(idx, f"aniso40k_{label}",
-                                        m=m, ksub=ksub, seed=99,
-                                        **kwargs)
+        books_r = build_pq_sidecar(idx, m=m, ksub=ksub, seed=99,
+                                   **kwargs)
         build_s = time.time() - t0
         snap = load_residual_snapshot(idx.version_dir)
         enc = (idx.spark.read.parquet(f"{idx.version_dir}/pq")
@@ -403,11 +307,9 @@ def aniso_mips_n40k(spark) -> dict:
 
     # the ladder loop leaves the aniso_lopq_rotated sidecar current
     # (round 10) — restore the GLOBAL aniso-residual flavor this
-    # measurement is about before streaming into it (same
-    # corpus/params as the aniso_residual rung → same cache tag)
-    _build_sidecar_cached(idx, "aniso40k_aniso_residual",
-                          m=m, ksub=ksub, seed=99,
-                          anisotropic=3.0, residual=True)
+    # measurement is about before streaming into it
+    build_pq_sidecar(idx, m=m, ksub=ksub, seed=99,
+                     anisotropic=3.0, residual=True)
     rng_o = np.random.default_rng(44)
     n_ood = 50
     Vo = rng_o.normal(size=(n_ood, d))
@@ -434,9 +336,8 @@ def aniso_mips_n40k(spark) -> dict:
     streamed_hit = own_hit_rate(
         np.load(f"{idx.version_dir}/pq_codebooks.npy"))
     t0 = time.time()
-    # NEVER cached: the corpus now includes the streamed OOD rows —
-    # the whole point is retraining ON them (rebuild_s stays a real
-    # retrain measurement even under --reuse-sidecars)
+    # the corpus now includes the streamed OOD rows — the whole
+    # point is retraining ON them
     books_rb = build_pq_sidecar(idx, m=m, ksub=ksub, seed=99,
                                 anisotropic=3.0, residual=True)
     rebuild_s = time.time() - t0
@@ -541,7 +442,10 @@ def sq_d256_probe(spark) -> dict:
     from quake_vector_search_spark.operators.evaluation import avg_recall
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.knn import knn_bruteforce
-    from quake_vector_search_spark.operators.quantization import knn_ivf_pq
+    from quake_vector_search_spark.operators.quantization import (
+        build_pq_sidecar,
+        knn_ivf_pq,
+    )
     from quake_vector_search_spark.operators.workload import make_dataset
 
     n, d = 100_000, 256
@@ -566,9 +470,9 @@ def sq_d256_probe(spark) -> dict:
 
     out = {"n": n, "d": d, "build_s": round(build_s, 2),
            "truth_s": round(truth_s, 2)}
-    for tag, bits in (("sqd256_sq8", 8), ("sqd256_sq4", 4)):
+    for bits in (8, 4):
         t1 = time.time()
-        _build_sidecar_cached(idx, tag, sq8=True, sq_bits=bits)
+        build_pq_sidecar(idx, sq8=True, sq_bits=bits)
         sq_build_s = time.time() - t1
         t1 = time.time()
         fsq, _ = knn_ivf_pq(idx, (qids, qmat), k=K,
@@ -706,8 +610,7 @@ def ivf_scale_n400k(spark) -> dict:
     # (round-6 measurement bug: a cached DataFrame is a hint, not a
     # snapshot).
     t1 = time.time()
-    books = _build_sidecar_cached(idx, "scale400k_plain",
-                                  m=8, ksub=256, seed=99)
+    books = build_pq_sidecar(idx, m=8, ksub=256, seed=99)
     pq_build_s = time.time() - t1
     t1 = time.time()
     fpq, _ = knn_ivf_pq(idx, (qids, qmat), k=K, target_recall=0.9,
@@ -717,9 +620,8 @@ def ivf_scale_n400k(spark) -> dict:
     pq_search_s = time.time() - t1
     plain_recall = round(avg_recall(fpq, exact, K), 4)
     t1 = time.time()
-    books_res = _build_sidecar_cached(idx, "scale400k_residual",
-                                      m=8, ksub=256, seed=99,
-                                      residual=True)
+    books_res = build_pq_sidecar(idx, m=8, ksub=256, seed=99,
+                                 residual=True)
     res_build_s = time.time() - t1
     t1 = time.time()
     fres, _ = knn_ivf_pq(idx, (qids, qmat), k=K, target_recall=0.9,
@@ -736,9 +638,9 @@ def ivf_scale_n400k(spark) -> dict:
     # codes the ladder leaves current on disk (each rung overwrites
     # the version's codes files).
     sq_rungs = {}
-    for tag, bits in (("scale400k_sq8", 8), ("scale400k_sq4", 4)):
+    for bits in (8, 4):
         t1 = time.time()
-        _build_sidecar_cached(idx, tag, sq8=True, sq_bits=bits)
+        build_pq_sidecar(idx, sq8=True, sq_bits=bits)
         sq_build_s = time.time() - t1
         t1 = time.time()
         fsq, _ = knn_ivf_pq(idx, (qids, qmat), k=K,
@@ -768,10 +670,9 @@ def ivf_scale_n400k(spark) -> dict:
     # tests/test_vector_kernels.py::test_local_books_beat_global_
     # residual_adc (0.714 vs 0.642 ADC-only).
     t1 = time.time()
-    books_lopq = _build_sidecar_cached(idx, "scale400k_lopq_rotated",
-                                       m=8, ksub=256, seed=99,
-                                       residual=True, local=True,
-                                       rotate=True)
+    books_lopq = build_pq_sidecar(idx, m=8, ksub=256, seed=99,
+                                  residual=True, local=True,
+                                  rotate=True)
     lopq_build_s = time.time() - t1
     t1 = time.time()
     flop, _ = knn_ivf_pq(idx, (qids, qmat), k=K, target_recall=0.9,
@@ -1216,10 +1117,6 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": sf,
-        # iteration mode marker: trained-books cache was live, so
-        # *_train_s / sidecar_build_s are not certification numbers
-        # (decision metrics are unaffected — same books either way)
-        **({"reuse_sidecars": True} if REUSE_SIDECARS else {}),
         "ivf": ivf,
         "ivf_n40k_reference_config": ivf40k,
         "ivf_calibrated_n40k": cal40k,
@@ -1236,13 +1133,11 @@ def main() -> None:
     # driver failed to parse r15's ~12 KB line with every nested
     # ladder/telemetry blob inlined, blinding round-over-round PERF.
     # The line carries exactly the driver contract — metric, value,
-    # unit, the FLAT per-query seconds, sf (+ the iteration-mode
-    # marker) — ~2 KB; every nested block still lands, unchanged, in
-    # the committed bench_results_*.json record below.
-    contract_keys = ("metric", "value", "unit", "queries", "sf",
-                     "reuse_sidecars")
-    print(json.dumps({k: payload[k] for k in contract_keys
-                      if k in payload}))
+    # unit, the FLAT per-query seconds, sf — ~2 KB; every nested
+    # block still lands, unchanged, in the committed
+    # bench_results_*.json record below.
+    contract_keys = ("metric", "value", "unit", "queries", "sf")
+    print(json.dumps({k: payload[k] for k in contract_keys}))
     # committed machine-readable copy (VERDICT r6 #4): the driver's
     # BENCH_r{N}.json keeps only a truncated output tail, so the
     # per-query longitudinal record must survive somewhere

@@ -504,17 +504,13 @@ def save_residual_snapshot(version_dir: str,
              if pids else np.zeros((0, 0)))
 
 
-def load_residual_snapshot(version_dir: str) -> dict | None:
+def load_residual_snapshot(version_dir: str) -> dict:
     """Encode-time centroid snapshot of a residual sidecar, as
-    {pid: centroid}; None when the sidecar predates snapshots (the
-    caller falls back to live centroids — the old drift-prone
-    behavior, kept for compatibility)."""
+    {pid: centroid}. Every residual sidecar writes one, so a missing
+    snapshot raises (FileNotFoundError)."""
     import os
 
-    path = os.path.join(version_dir, "pq_centroids.npz")
-    if not os.path.exists(path):
-        return None
-    z = np.load(path)
+    z = np.load(os.path.join(version_dir, "pq_centroids.npz"))
     return {int(p): z["centroids"][i]
             for i, p in enumerate(z["part_ids"])}
 
@@ -1021,8 +1017,7 @@ def _encode_sq8_sidecar(res_src: DataFrame, params: dict,
     spark = res_src.sparkSession
     bc = spark.sparkContext.broadcast((params["vmin"],
                                        params["scale"],
-                                       int(params.get("levels",
-                                                      256))))
+                                       int(params["levels"])))
 
     def encode(batches):
         vmin, scale, levels = bc.value
@@ -1049,7 +1044,7 @@ def save_sq8_params(version_dir: str, params: dict) -> None:
 
     np.savez(os.path.join(version_dir, "sq8_params.npz"),
              vmin=params["vmin"], scale=params["scale"],
-             levels=np.int64(params.get("levels", 256)))
+             levels=np.int64(params["levels"]))
 
 
 def load_sq8_params(version_dir: str) -> dict | None:
@@ -1059,9 +1054,8 @@ def load_sq8_params(version_dir: str) -> dict | None:
     if not os.path.exists(path):
         return None
     z = np.load(path)
-    # pre-round-15 files carry no grid width — they are all 8-bit
-    levels = int(z["levels"]) if "levels" in z.files else 256
-    return {"vmin": z["vmin"], "scale": z["scale"], "levels": levels}
+    return {"vmin": z["vmin"], "scale": z["scale"],
+            "levels": int(z["levels"])}
 
 
 _LOCAL_SIDECAR_CACHE: dict = {}
@@ -1420,139 +1414,162 @@ def _residual_corpus(index, corpus, cent_by_pid: dict | None = None):
              f"{vec_col} array<double>")
 
 
-def _build_aniso_global(index, corpus, m, ksub, seed,
-                        residual, rotate, anisotropic,
-                        ood_min_explained=0.05,
-                        ood_rebuild_rate=None,
-                        distributed_train=False,
-                        pretrained_books=None,
-                        distributed_train_intent=None,
-                        opq_iters=0,
-                        pretrained_rot=None):
-    """The GLOBAL-books anisotropic sidecar build (rounds 8-9),
-    factored out of build_pq_sidecar when round 10 added the per-cell
-    (aniso × LOPQ) variant alongside it. ``opq_iters > 0`` (round 13)
-    replaces the one-shot PCA rotation with the SCORE-AWARE iterative
-    OPQ alternation (``aniso_opq_refine_local`` — eigalloc init, then
-    aniso-books ↔ MM-Procrustes rounds); the refined rotation
-    persists in the standard pq_rotation.npz, so the ADC/query/
-    streaming sides are unchanged."""
+_SIDECAR_FILES = ("pq_codebooks.npy", "pq_rotation.npz",
+                  "pq_local_books.npz", "sq8_params.npz",
+                  "pq_centroids.npz")
+
+
+def _load_sidecar(version_dir: str, pids=None
+                  ) -> tuple[dict | None, dict]:
+    """The PQ sidecar of one version dir as ``(meta, artifacts)`` — the
+    ONE reader of the on-disk format (``_publish_sidecar`` is the one
+    writer). ``meta`` is pq_meta.json; ``(None, {})`` when the version
+    has no sidecar, after a single existence check. The flavor comes
+    from the meta; only a global flavor's rotation is told by its
+    file's presence (the plain flavors' meta never recorded
+    ``rotate``). Artifacts:
+
+    - ``books`` (global codebooks) and ``rotation`` ({mean,
+      components}; rotated global flavors only);
+    - ``sq8``: the scalar quantizer's {vmin, scale, levels};
+    - ``local_books`` / ``local_rots`` (None when unrotated): per-cell
+      books and rotations, through the query-side cache;
+    - ``snapshot``: a residual flavor's encode-time centroids
+      {pid: c}. A residual sidecar without one raises.
+
+    Per-cell state (local books and rotations, snapshot centroids)
+    loads only for ``pids``: ``None`` loads every cell, an empty
+    collection none — a refresh reads just the meta and the global
+    artifacts, a query just its probed cells."""
     import json
     import os
 
-    from quake_vector_search_spark.operators.pca import fit_pca
+    path = os.path.join(version_dir, "pq_meta.json")
+    if not os.path.exists(path):
+        return None, {}
+    with open(path) as fh:
+        meta = json.load(fh)
+    art: dict = {}
+    if meta.get("sq8"):
+        art["sq8"] = load_sq8_params(version_dir)
+    elif not meta.get("local"):
+        art["books"] = np.load(os.path.join(version_dir,
+                                            "pq_codebooks.npy"))
+        rot_path = os.path.join(version_dir, "pq_rotation.npz")
+        if os.path.exists(rot_path):
+            z = np.load(rot_path)
+            art["rotation"] = {"mean": z["mean"],
+                               "components": z["components"]}
+    if pids is not None and not len(pids):
+        return meta, art
+    if meta.get("local"):
+        art["local_books"], art["local_rots"] = (
+            _load_local_sidecar_cached(version_dir, pids))
+    if meta.get("residual"):
+        snap = load_residual_snapshot(version_dir)
+        art["snapshot"] = (snap if pids is None else
+                           {int(p): snap[int(p)] for p in pids
+                            if int(p) in snap})
+    return meta, art
 
-    enc_src, enc_cents = corpus, None
-    if residual:
-        enc_cents = {int(p): index.centroids[i].copy()
-                     for i, p in enumerate(index.part_ids)}
-        enc_src = _residual_corpus(index, corpus, enc_cents)
-    rot = None
-    joint_books = None
-    if pretrained_rot is not None:
-        # --reuse-sidecars dict payload (round 14, VERDICT r13 #4):
-        # the refined/fitted rotation rides in with the books, so the
-        # alternation (the expensive part of the aniso×OPQ rung) is
-        # skipped entirely — codes are identical because both come
-        # from an identical prior build
-        rot = {"mean": np.asarray(pretrained_rot["mean"]),
-               "components": np.asarray(pretrained_rot["components"])}
-    elif rotate and opq_iters:
-        # joint rotation+books refinement on the bounded driver
-        # sample (a d×d rotation needs a representative sample, not
-        # the corpus — the same argument as the coarse quantizer)
-        Xs, Xhs = _aniso_sample(enc_src, index.vec_col, seed,
-                                25_000, enc_cents)
-        model = aniso_opq_refine_local(Xs, Xhs, m=m, ksub=ksub,
-                                       eta=float(anisotropic),
-                                       opq_iters=int(opq_iters),
-                                       seed=seed, parallel_init=True)
-        rot = {"mean": model["mean"],
-               "components": model["components"]}
-        joint_books = model["books"]
-    elif rotate:
-        # OPQ non-parametric init fitted on the ENCODE source
-        # (residuals when residual=True — their distribution is
-        # what the books will model), same as the plain flavors
-        model = fit_pca(enc_src, vec_col=index.vec_col)
-        rot = {"mean": model["mean"],
-               "components": model["components"]}
-    if pretrained_books is not None:
-        # --reuse-sidecars iteration mode (round 11, VERDICT r10 #7):
-        # skip training, encode with the caller's books — identical
-        # codes/meta/snapshot as a fresh build with these books
-        books = pretrained_books
-    elif distributed_train:
-        # round 11 (VERDICT r10 #4): sample and alternations stay
-        # distributed — no driver-memory bound on the training sample.
-        # With opq_iters the REFINED rotation (broadcast-scale,
-        # sample-fitted above) is held fixed and the books retrain
-        # distributed in its space — the loss transport is exact for
-        # any orthogonal R, refined or PCA.
-        books = aniso_pq_train_distributed(
-            enc_src, m=m, ksub=ksub, eta=float(anisotropic),
-            seed=seed, vec_col=index.vec_col,
-            cents=enc_cents, rot=rot)
-    elif joint_books is not None:
-        # the joint refinement already trained books on the same
-        # bounded sample aniso_pq_train would draw
-        books = joint_books
-    else:
-        books = aniso_pq_train(enc_src, m=m, ksub=ksub,
-                               eta=float(anisotropic), seed=seed,
-                               vec_col=index.vec_col,
-                               cents=enc_cents, rot=rot)
-    enc = aniso_pq_encode(enc_src, books, eta=float(anisotropic),
-                          id_col=index.id_col,
-                          vec_col=index.vec_col,
-                          keep_cols=("partition_id",),
-                          cents=enc_cents, rot=rot)
-    path = os.path.join(index.version_dir, "pq")
-    (enc.write.mode("overwrite").partitionBy("partition_id")
-        .parquet(path))
-    np.save(os.path.join(index.version_dir, "pq_codebooks.npy"),
-            books)
-    if residual:
-        save_residual_snapshot(index.version_dir, enc_cents)
-    if rotate:
-        np.savez(os.path.join(index.version_dir,
-                              "pq_rotation.npz"),
-                 mean=rot["mean"], components=rot["components"])
-    for stale in ("pq_local_books.npz", "sq8_params.npz") + (
-            () if rotate else ("pq_rotation.npz",)) + (
-            () if residual else ("pq_centroids.npz",)):
-        sp = os.path.join(index.version_dir, stale)
-        if os.path.exists(sp):
-            os.unlink(sp)
-    import shutil as _shutil
 
-    _shutil.rmtree(_books_table_dir(index.version_dir),
-                   ignore_errors=True)
-    with open(os.path.join(index.version_dir, "pq_meta.json"),
-              "w") as fh:
-        meta_g = {"residual": bool(residual), "m": m,
-                  "ksub": int(books.shape[1]),
-                  "rotate": bool(rotate), "seed": int(seed),
-                  "anisotropic": float(anisotropic),
-                  "ood_min_explained": float(ood_min_explained)}
-        if opq_iters:
-            # maintenance retrains re-read this and re-run the
-            # score-aware alternation (refresh_pq_sidecar passes
-            # pm["opq_iters"] back into build_pq_sidecar)
-            meta_g["opq_iters"] = int(opq_iters)
-        if distributed_train_intent is not None:
-            # EXPLICIT trainer choice carries through maintenance
-            # retrains; auto (no key) re-resolves against the grown
-            # corpus at retrain time
-            meta_g["distributed_train"] = bool(
-                distributed_train_intent)
-        if ood_rebuild_rate is not None:
-            # persisted maintenance knob (round 11): maintain() reads
-            # it to decide when streamed-OOD drift warrants a
-            # retraining rebuild instead of carrying books forward
-            meta_g["ood_rebuild_rate"] = float(ood_rebuild_rate)
-        json.dump(meta_g, fh)
-    return books
+def _sidecar_tag(version_dir: str) -> tuple | None:
+    """Staleness tag of a version's sidecar for caches that outlive a
+    call (the ingest appenders' books cache); None without a sidecar.
+    It covers the params files (mtime, size), an md5 of the first
+    64 KiB of the first one, and an md5 of pq_meta.json: a same-flavor
+    rebuild into the same version dir must invalidate, and two
+    rebuilds inside the filesystem timestamp granularity defeat mtime
+    alone (ADVICE r7/r8). Retrained books practically never share
+    their leading bytes; a books table's appends add files."""
+    import hashlib
+    import json
+    import os
+
+    meta_path = os.path.join(version_dir, "pq_meta.json")
+    if not os.path.exists(meta_path):
+        return None
+    with open(meta_path, "rb") as fh:
+        raw = fh.read()
+    meta = json.loads(raw)
+    files = ((meta.get("local") and _books_table_files(version_dir))
+             or [os.path.join(version_dir,
+                              "sq8_params.npz" if meta.get("sq8")
+                              else "pq_local_books.npz"
+                              if meta.get("local")
+                              else "pq_codebooks.npy")])
+    with open(files[0], "rb") as fh:
+        head = hashlib.md5(fh.read(65536)).hexdigest()
+    return (tuple((f, os.path.getmtime(f), os.path.getsize(f))
+                  for f in files), head, hashlib.md5(raw).hexdigest())
+
+
+def _publish_sidecar(index, meta: dict, artifacts: dict,
+                     codes_df: DataFrame) -> None:
+    """Write the index's current version's PQ sidecar — the ONE writer
+    of the format ``_load_sidecar`` reads. The codes land partitioned
+    exactly like the corpus (same partition_id pruning); then every
+    other sidecar file is deleted, so a rebuild into the same version
+    dir never leaves a previous flavor's file behind; then the
+    artifacts present (keys as the loader returns them); pq_meta.json
+    last."""
+    import json
+    import os
+    import shutil
+
+    vd = index.version_dir
+    (codes_df.write.mode("overwrite").partitionBy("partition_id")
+        .parquet(os.path.join(vd, "pq")))
+    for f in _SIDECAR_FILES:
+        if os.path.exists(os.path.join(vd, f)):
+            os.unlink(os.path.join(vd, f))
+    shutil.rmtree(_books_table_dir(vd), ignore_errors=True)
+    a = artifacts
+    if "books" in a:
+        np.save(os.path.join(vd, "pq_codebooks.npy"), a["books"])
+    if "rotation" in a:
+        np.savez(os.path.join(vd, "pq_rotation.npz"),
+                 mean=a["rotation"]["mean"],
+                 components=a["rotation"]["components"])
+    if "local_books" in a:
+        save_local_books(vd, a["local_books"],
+                         rots_by_pid=a["local_rots"],
+                         fmt=meta["books_format"])
+    if "sq8" in a:
+        save_sq8_params(vd, a["sq8"])
+    if "snapshot" in a:
+        save_residual_snapshot(vd, a["snapshot"])
+    with open(os.path.join(vd, "pq_meta.json"), "w") as fh:
+        json.dump(meta, fh)
+
+
+def _encode_sidecar(index, src: DataFrame, meta: dict,
+                    art: dict) -> DataFrame:
+    """Codes of ``src`` — the corpus, or its residuals against
+    ``art["snapshot"]`` for residual flavors — under the flavor's
+    artifacts; shared by the build and the carry refresh."""
+    id_col, vec_col = index.id_col, index.vec_col
+    if meta.get("sq8"):
+        return _encode_sq8_sidecar(src, art["sq8"], id_col, vec_col)
+    if meta.get("local"):
+        return _encode_local_sidecar(src, art["local_books"], id_col,
+                                     vec_col,
+                                     rots_by_pid=art["local_rots"],
+                                     anisotropic=meta.get("anisotropic"),
+                                     cents=art["snapshot"])
+    if meta.get("anisotropic") is not None:
+        # the rotation applies INSIDE the encoder: the score-parallel
+        # direction is rebuilt from the unrotated rows (+ snapshot)
+        return aniso_pq_encode(src, art["books"],
+                               eta=float(meta["anisotropic"]),
+                               id_col=id_col, vec_col=vec_col,
+                               keep_cols=("partition_id",),
+                               cents=art.get("snapshot"),
+                               rot=art.get("rotation"))
+    if "rotation" in art:
+        src = _rotate_corpus(index, src, art["rotation"])
+    return pq_encode(src, art["books"], id_col=id_col, vec_col=vec_col,
+                     keep_cols=("partition_id",))
 
 
 # Scale-default boundaries (round 13, VERDICT r12 missing #1 / r11
@@ -1578,7 +1595,7 @@ def _resolve_scale_defaults(n_rows: int, n_cells: int, local: bool,
     append-only parquet books table once a LOCAL sidecar's cell count
     makes npz archive rewrites the dominant append cost
     (``AUTO_BOOKS_TABLE_CELLS``). ``trains_global_books=False``
-    (local/sq8/pretrained flavors — nothing downstream reads the
+    (local/sq8 flavors — nothing downstream reads the
     flag) suppresses the distributed auto-select and its advisory: a
     warning about a trainer that never runs is noise. Pure function —
     the boundary is pinned by tests without building threshold-sized
@@ -1622,7 +1639,6 @@ def build_pq_sidecar(index, m: int = 8, ksub: int = 256,
                      ood_min_explained: float = 0.05,
                      ood_rebuild_rate: float | None = None,
                      distributed_train: bool | None = None,
-                     pretrained_books: np.ndarray | dict | None = None,
                      books_format: str | None = None):
     """Build a PQ codes *sidecar* for a published IVF index version:
     train codebooks on a bounded sample of the live corpus, encode every
@@ -1697,23 +1713,7 @@ def build_pq_sidecar(index, m: int = 8, ksub: int = 256,
     streamed appends always take the MSE code); the
     ``aniso_mips_n40k.streamed_ood`` bench point is the measurement
     hook.
-
-    ``pretrained_books`` (iteration mode, rounds 11/14): a bare
-    ndarray injects global codebooks for the UNROTATED global
-    flavors; a dict payload extends the skip-training contract to
-    every flavor — ``{"books", "rotation"}`` for rotated globals
-    (incl. anisotropic × opq_iters — the alternation is skipped),
-    ``{"local_books"[, "local_rots"]}`` for LOPQ, ``{"sq8_params"}``
-    for sq8. The payload must be harvested from an identical prior
-    build: per-cell books are layout-bound (coverage of every
-    populated cell is validated), the rest are distribution-bound
-    (the caller asserts the corpus is unchanged — the bench's
-    seeded datasets). Codes, meta and snapshot come out identical
-    to a fresh build; only training time drops.
     """
-    import json
-    import os
-
     from quake_vector_search_spark.operators.pca import fit_pca
 
     corpus = index.read_corpus()
@@ -1730,8 +1730,7 @@ def build_pq_sidecar(index, m: int = 8, ksub: int = 256,
         int(np.sum(_sizes)) if len(_sizes) else 0,
         len(getattr(index, "part_ids", ())),
         local, distributed_train, books_format,
-        trains_global_books=(not local and not sq8
-                             and pretrained_books is None))
+        trains_global_books=not local and not sq8)
     if books_format not in ("npz", "table"):
         raise ValueError(f"books_format must be 'npz' or 'table', "
                          f"got {books_format!r}")
@@ -1739,58 +1738,6 @@ def build_pq_sidecar(index, m: int = 8, ksub: int = 256,
         raise ValueError("books_format='table' applies to LOCAL "
                          "(per-cell) sidecars — global flavors keep "
                          "one broadcast-scale codebook file")
-    _pre = None
-    if pretrained_books is not None:
-        if isinstance(pretrained_books, dict):
-            # round 14 (VERDICT r13 #4): a DICT payload extends the
-            # iteration-mode injection to every flavor by carrying
-            # ALL of what training produces — global books + their
-            # rotation, a local sidecar's per-cell books (+ per-cell
-            # rotations), sq8's bounds. The bare-array form keeps the
-            # round-11 contract (unrotated global only); the dict is
-            # validated here so a flavor/payload mispair fails at the
-            # call site, not as silently garbage codes.
-            if sq8:
-                need = ("sq8_params",)
-            elif local:
-                need = (("local_books", "local_rots") if rotate
-                        else ("local_books",))
-            else:
-                need = (("books", "rotation") if rotate
-                        else ("books",))
-            missing = [k for k in need
-                       if pretrained_books.get(k) is None]
-            if missing:
-                raise ValueError(
-                    f"pretrained payload for this flavor needs "
-                    f"{list(need)}, missing {missing} — harvest it "
-                    "from an identical prior build (books/rotations/"
-                    "bounds are what training produces; a partial "
-                    "payload would silently mispair codes and "
-                    "params)")
-            if not sq8 and not local:
-                _b = np.asarray(pretrained_books["books"])
-                if _b.shape[0] != m:
-                    raise ValueError(
-                        f"pretrained books have m={_b.shape[0]}, "
-                        f"build asked m={m}")
-            _pre = pretrained_books
-            # global paths consume the plain array from here on;
-            # local/sq8 branches read their artifacts from _pre
-            pretrained_books = _pre.get("books")
-        elif local or sq8 or rotate:
-            # bare-array injection (round 11, VERDICT r10 #7) covers
-            # the UNROTATED GLOBAL flavors only: a rotated sidecar's
-            # rotation, a local sidecar's per-cell dict and sq8's
-            # bounds are part of what training produces — reusing
-            # books without them would silently mispair. Pass the
-            # dict payload form for those flavors.
-            raise ValueError(
-                "bare pretrained_books supports unrotated global "
-                "flavors only (not local/sq8/rotate) — pass a dict "
-                "payload with the flavor's full trained artifacts "
-                "instead")
-    enc_cents = None
     if anisotropic is not None:
         # ANISOTROPIC flavor (round 8): score-aware books + codes for
         # COSINE indexes — the corpus is unit-normalized there, so the
@@ -1805,14 +1752,11 @@ def build_pq_sidecar(index, m: int = 8, ksub: int = 256,
         # anisotropic loss transports EXACTLY into the rotated space —
         # e_orig = e_rot @ R, so training score-aware books on
         # ``(v − mean) @ Rᵀ`` with direction x̂ @ Rᵀ minimizes the
-        # original-space loss (see aniso_pq_train). The persisted
-        # format is the standard pq_rotation.npz, so the ADC/query
-        # side is unchanged. ``opq_iters`` (round 13) now composes on
-        # BOTH rotated flavors: globally, aniso_opq_refine_local
-        # alternates score-aware books with an MM-Procrustes rotation
-        # update that descends the anisotropic loss itself — the
-        # "score-aware Procrustes step" the old refusal named as
-        # missing; with ``local=True`` the same alternation runs
+        # original-space loss (see aniso_pq_train). ``opq_iters``
+        # (round 13) composes on BOTH rotated flavors: globally,
+        # aniso_opq_refine_local alternates score-aware books with an
+        # MM-Procrustes rotation update that descends the anisotropic
+        # loss itself; with ``local=True`` the same alternation runs
         # inside each cell's grouped-map fit (``train_local_books``,
         # opq_iters ≥ 1 engages — ≤ 0 keeps the eigalloc-init-only
         # fit bit-for-bit). sq8 stays an explicit error.
@@ -1834,9 +1778,8 @@ def build_pq_sidecar(index, m: int = 8, ksub: int = 256,
             # driver-side twin of aniso_opq_refine_local's eta >= 1
             # refusal (ADVICE r14 low): with local=True that check
             # fires inside per-cell grouped-map EXECUTOR tasks, so
-            # the refusal surfaced as a mid-job worker
-            # PythonException instead of a call-site ValueError —
-            # mirror the other flavor-compatibility gates here
+            # the refusal would surface as a mid-job worker
+            # PythonException instead of a call-site ValueError
             raise ValueError(
                 "anisotropic × rotate × opq_iters requires "
                 f"anisotropic (eta) >= 1, got {anisotropic!r}: the "
@@ -1850,308 +1793,149 @@ def build_pq_sidecar(index, m: int = 8, ksub: int = 256,
                 "anisotropic sidecars require a cosine index: on "
                 "unit vectors dot ordering == L2 ordering, which is "
                 "what the score-aware loss preserves")
-        if not local:
-            # past every validation gate: the (re)build is definitely
-            # happening — reset the streamed-OOD drift window (the
-            # counter measures appends against THESE books; round 11)
-            reset_ood_stats(index.version_dir)
-            return _build_aniso_global(index, corpus, m, ksub, seed,
-                                       residual, rotate,
-                                       float(anisotropic),
-                                       float(ood_min_explained),
-                                       ood_rebuild_rate,
-                                       distributed_train,
-                                       pretrained_books,
-                                       _dt_intent,
-                                       opq_iters=int(opq_iters),
-                                       pretrained_rot=(
-                                           _pre.get("rotation")
-                                           if _pre else None))
-        # aniso × LOPQ (round 10): per-cell SCORE-AWARE books — falls
-        # through to the local branch below, which passes η into
-        # train_local_books/_encode_local_sidecar; implies the
-        # residual encoding like every local sidecar
-    # every (re)build resets the streamed-OOD drift window (idempotent
-    # — placed after the aniso gates so refusals don't touch the
-    # index state; round 11)
+    if sq8 and (rotate or local or opq_iters):
+        raise ValueError(
+            "sq8 composes with none of rotate/local/opq_iters — "
+            "it has no subspaces to rotate and no codebooks")
+    if sq8 and int(sq_bits) not in (4, 8):
+        # 4 bits (16 levels, d/2 logical bytes — the SQ4 flavor,
+        # round 15 / VERDICT r14 #7) or the classic 8; other widths
+        # have no byte-accounting story worth a flavor
+        raise ValueError(f"sq_bits must be 4 or 8, got {sq_bits!r}")
+    if local and opq_iters and not rotate:
+        raise ValueError(
+            "local + opq_iters requires rotate=True: iterative "
+            "OPQ refines a per-cell ROTATION — without one the "
+            "parameter would be silently ignored")
+    # every (re)build resets the streamed-OOD drift window (the counter
+    # measures appends against THESE books; round 11) — after the
+    # gates, so refusals don't touch the index state
     reset_ood_stats(index.version_dir)
-    if sq8:
-        # IVF+SQ8 (the FAISS IVFScalarQuantizer point on the ladder):
-        # one uint8 PER DIMENSION instead of m sub-codes — d bytes
-        # per vector, so at d=64 it sits between PQ-8 (8 B) and raw
-        # float32 (256 B) with much higher fidelity than PQ at the
-        # cost of more scan bytes. Always residual-encoded (the
-        # per-dim range of residuals is a fraction of raw vectors',
-        # so the 1/255 step carries more precision); per-dim bounds
-        # are distribution-bound — maintenance carries them forward
-        # like global codebooks.
-        if rotate or local or opq_iters:
-            raise ValueError(
-                "sq8 composes with none of rotate/local/opq_iters — "
-                "it has no subspaces to rotate and no codebooks")
-        if int(sq_bits) not in (4, 8):
-            # 4 bits (16 levels, d/2 logical bytes — the SQ4 flavor,
-            # round 15 / VERDICT r14 #7) or the classic 8; other
-            # widths have no byte-accounting story worth a flavor
-            raise ValueError(
-                f"sq_bits must be 4 or 8, got {sq_bits!r}")
-        levels = 1 << int(sq_bits)
-        enc_cents = {int(p): index.centroids[i].copy()
-                     for i, p in enumerate(index.part_ids)}
-        res_src = _residual_corpus(index, corpus, enc_cents)
-        if _pre is not None:
-            params = _pre["sq8_params"]
-            if int(params.get("levels", 256)) != levels:
-                raise ValueError(
-                    f"pretrained sq8_params carry a "
-                    f"{int(params.get('levels', 256))}-level grid "
-                    f"but the build asked sq_bits={int(sq_bits)} "
-                    f"({levels} levels) — scalar bounds are "
-                    "grid-bound; harvest the payload from a build "
-                    "with the same sq_bits")
-        else:
-            params = fit_sq8_params(res_src, index.vec_col,
-                                    levels=levels)
-        enc = _encode_sq8_sidecar(res_src, params,
-                                  index.id_col, index.vec_col)
-        path = os.path.join(index.version_dir, "pq")
-        (enc.write.mode("overwrite").partitionBy("partition_id")
-            .parquet(path))
-        save_sq8_params(index.version_dir, params)
-        save_residual_snapshot(index.version_dir, enc_cents)
-        for stale in ("pq_rotation.npz", "pq_codebooks.npy",
-                      "pq_local_books.npz"):
-            sp = os.path.join(index.version_dir, stale)
-            if os.path.exists(sp):
-                os.unlink(sp)
-        import shutil as _shutil
-
-        _shutil.rmtree(_books_table_dir(index.version_dir),
-                       ignore_errors=True)
-        with open(os.path.join(index.version_dir, "pq_meta.json"),
-                  "w") as fh:
-            json.dump({"residual": True, "sq8": True,
-                       "sq_bits": int(sq_bits),
-                       "m": int(len(params["vmin"])),
-                       "ksub": int(params.get("levels", 256))}, fh)
-        return params
-    if local:
-        if opq_iters and not rotate:
-            raise ValueError(
-                "local + opq_iters requires rotate=True: iterative "
-                "OPQ refines a per-cell ROTATION — without one the "
-                "parameter would be silently ignored")
-        enc_cents = {int(p): index.centroids[i].copy()
-                     for i, p in enumerate(index.part_ids)}
-        res_src = _residual_corpus(index, corpus, enc_cents)
-        if _pre is not None:
-            # --reuse-sidecars dict payload (round 14, VERDICT r13
-            # #4): per-cell books are LAYOUT-BOUND, so injection is
-            # valid ONLY when the payload comes from an identical
-            # build on an identical layout (the bench's seeded
-            # corpora) — coverage of every populated cell is the
-            # cheap invariant that catches a layout mismatch
-            books_by_pid = {int(p): np.asarray(b, dtype=np.float64)
-                            for p, b in _pre["local_books"].items()}
-            rots_by_pid = ({int(p): r
-                            for p, r in _pre["local_rots"].items()}
-                           if rotate else None)
-            _needed = {int(p) for p, s in zip(index.part_ids,
-                                              index.sizes)
-                       if int(s) > 0}
-            _miss = sorted(_needed - set(books_by_pid))
-            if _miss:
-                raise ValueError(
-                    f"pretrained local books miss populated cells "
-                    f"{_miss[:8]} — per-cell books are layout-bound; "
-                    "the payload must come from an identical build "
-                    "on an identical partition layout")
-            if rotate:
-                # same populated-cell coverage gate for the per-cell
-                # ROTATIONS (ADVICE r14 low): a payload missing one
-                # cell's rotation previously passed the books check
-                # and failed (or silently mispaired) inside the
-                # encode executor task
-                _rmiss = sorted(_needed
-                                - {int(p) for p in rots_by_pid})
-                if _rmiss:
-                    raise ValueError(
-                        f"pretrained local rotations miss populated "
-                        f"cells {_rmiss[:8]} — per-cell rotations "
-                        "are layout-bound like the books; the "
-                        "payload must come from an identical "
-                        "rotate=True build on an identical "
-                        "partition layout")
-        else:
-            # aniso semantics (round 13): opq_iters N ≥ 1 = run the
-            # score-aware alternation with N outer iterations, 0 =
-            # the flavor-native init (per-cell eigalloc) — same
-            # engagement rule as the global aniso flavor, so an
-            # explicit 1 is never silently ignored. The non-aniso
-            # full-LOPQ path keeps its historical ≥1 coercion
-            # (opq_refine_local's 1 = eigalloc-init-only contract).
-            books_by_pid, rots_by_pid = train_local_books(
-                res_src, m=m, ksub=ksub, seed=seed,
-                cell_sample_n=cell_sample_n,
-                id_col=index.id_col, vec_col=index.vec_col,
-                rotate=rotate,
-                opq_iters=(int(opq_iters) if anisotropic is not None
-                           else max(1, opq_iters)),
-                anisotropic=anisotropic, cents=enc_cents)
-        enc = _encode_local_sidecar(res_src, books_by_pid,
-                                    index.id_col, index.vec_col,
-                                    rots_by_pid=rots_by_pid,
-                                    anisotropic=anisotropic,
-                                    cents=enc_cents)
-        path = os.path.join(index.version_dir, "pq")
-        (enc.write.mode("overwrite").partitionBy("partition_id")
-            .parquet(path))
-        save_local_books(index.version_dir, books_by_pid,
-                         rots_by_pid=rots_by_pid, fmt=books_format)
-        save_residual_snapshot(index.version_dir, enc_cents)
-        for stale in ("pq_rotation.npz", "pq_codebooks.npy",
-                      "sq8_params.npz"):
-            sp = os.path.join(index.version_dir, stale)
-            if os.path.exists(sp):
-                os.unlink(sp)
-        with open(os.path.join(index.version_dir, "pq_meta.json"),
-                  "w") as fh:
-            meta_loc = {"residual": True, "local": True, "m": m,
-                        "ksub": int(ksub), "seed": int(seed),
-                        "rotate": bool(rotate),
-                        # aniso×rotate: ≥1 = the per-cell score-aware
-                        # alternation (round 13), recorded verbatim
-                        # so retrains and streamed born cells re-run
-                        # it; 0 = the eigalloc-init-only flavor
-                        "opq_iters": ((int(opq_iters)
-                                       if rotate and int(opq_iters) >= 1
-                                       else 0)
-                                      if anisotropic is not None
-                                      else (int(max(1, opq_iters))
-                                            if rotate else 0)),
-                        "cell_sample_n": int(cell_sample_n),
-                        "books_format": books_format,
-                        # auto intent: maintenance retrains re-run
-                        # the scale auto-select on the grown index
-                        # instead of pinning this build's resolution
-                        "books_format_auto": _fmt_intent is None}
-            if anisotropic is not None:
-                meta_loc["anisotropic"] = float(anisotropic)
-                meta_loc["ood_min_explained"] = float(
-                    ood_min_explained)
-                if ood_rebuild_rate is not None:
-                    meta_loc["ood_rebuild_rate"] = float(
-                        ood_rebuild_rate)
-            json.dump(meta_loc, fh)
-        return books_by_pid
-    if rotate and residual:
-        # OPQ→IVF→ADC: snapshot the encode-time centroids, form the
-        # residual corpus, fit the rotation ON the residuals (their
-        # distribution is what the codebooks will model), encode
-        # rotated residuals
-        enc_cents = {int(p): index.centroids[i].copy()
-                     for i, p in enumerate(index.part_ids)}
-        res_src = _residual_corpus(index, corpus, enc_cents)
-        if _pre is not None:
-            # dict-payload injection (round 14): the fitted/refined
-            # rotation rides in with the books — skip the fit
-            model = _pre["rotation"]
-        elif opq_iters > 0:
-            from quake_vector_search_spark.operators.kmeans import (
-                _seeded_sample,
-            )
-
-            _, samp = _seeded_sample(res_src, index.vec_col,
-                                     index.id_col,
-                                     min(sample_n, 25_000), seed)
-            model = opq_refine_local(samp, m=m, ksub=ksub,
-                                     opq_iters=opq_iters, seed=seed,
-                                     parallel_init=True)
-        else:
-            model = fit_pca(res_src, vec_col=index.vec_col)
-        rot = {"mean": model["mean"], "components": model["components"]}
-        enc_src = _rotate_corpus(index, res_src, rot)
-    elif rotate:
-        if _pre is not None:
-            model = _pre["rotation"]
-        elif opq_iters > 0:
-            # iterative OPQ (round 7): alternate codebook training and
-            # Procrustes rotation updates on a bounded seeded sample —
-            # same persisted-rotation contract, strictly better (or
-            # equal) reconstruction than the one-shot PCA init. The
-            # refine sample is capped below the train sample: a d×d
-            # rotation needs far fewer rows than ksub·m centroids do.
-            from quake_vector_search_spark.operators.kmeans import (
-                _seeded_sample,
-            )
-
-            _, samp = _seeded_sample(corpus, index.vec_col,
-                                     index.id_col,
-                                     min(sample_n, 25_000), seed)
-            model = opq_refine_local(samp, m=m, ksub=ksub,
-                                     opq_iters=opq_iters, seed=seed,
-                                     parallel_init=True)
-        else:
-            model = fit_pca(corpus, vec_col=index.vec_col)
-        rot = {"mean": model["mean"], "components": model["components"]}
-        enc_src = _rotate_corpus(index, corpus, rot)
-    elif residual:
+    eta = None if anisotropic is None else float(anisotropic)
+    cents = None
+    if residual or local or sq8:
         # freeze the encode-time centroids: DML drifts the live ones,
         # and the ADC LUTs must match what the codes were quantized
-        # against (see save_residual_snapshot)
-        enc_cents = {int(p): index.centroids[i].copy()
-                     for i, p in enumerate(index.part_ids)}
-        rot, enc_src = None, _residual_corpus(index, corpus, enc_cents)
+        # against (see save_residual_snapshot). Local and sq8
+        # sidecars are always residual-encoded.
+        cents = {int(p): index.centroids[i].copy()
+                 for i, p in enumerate(index.part_ids)}
+    src = corpus if cents is None else _residual_corpus(index, corpus,
+                                                        cents)
+    art: dict = {} if cents is None else {"snapshot": cents}
+    if sq8:
+        # IVF+SQ8 (the FAISS IVFScalarQuantizer point on the ladder):
+        # one code PER DIMENSION instead of m sub-codes; per-dim
+        # bounds are distribution-bound — maintenance carries them
+        # forward like global codebooks
+        art["sq8"] = out = fit_sq8_params(src, index.vec_col,
+                                          levels=1 << int(sq_bits))
+        meta = {"residual": True, "sq8": True, "sq_bits": int(sq_bits),
+                "m": int(len(out["vmin"])), "ksub": int(out["levels"])}
+    elif local:
+        # aniso semantics (round 13): opq_iters N ≥ 1 = run the
+        # score-aware alternation with N outer iterations, 0 = the
+        # flavor-native init (per-cell eigalloc). The non-aniso
+        # full-LOPQ path keeps its historical ≥1 coercion
+        # (opq_refine_local's 1 = eigalloc-init-only contract).
+        out, art["local_rots"] = train_local_books(
+            src, m=m, ksub=ksub, seed=seed, cell_sample_n=cell_sample_n,
+            id_col=index.id_col, vec_col=index.vec_col, rotate=rotate,
+            opq_iters=(int(opq_iters) if eta is not None
+                       else max(1, opq_iters)),
+            anisotropic=anisotropic, cents=cents)
+        art["local_books"] = out
+        meta = {"residual": True, "local": True, "m": m,
+                "ksub": int(ksub), "seed": int(seed),
+                "rotate": bool(rotate),
+                # recorded verbatim so retrains and streamed born
+                # cells re-run the same per-cell fit
+                "opq_iters": ((int(opq_iters)
+                               if rotate and int(opq_iters) >= 1 else 0)
+                              if eta is not None
+                              else (int(max(1, opq_iters))
+                                    if rotate else 0)),
+                "cell_sample_n": int(cell_sample_n),
+                "books_format": books_format,
+                # auto intent: maintenance retrains re-run the scale
+                # auto-select on the grown index
+                "books_format_auto": _fmt_intent is None}
     else:
-        rot, enc_src = None, corpus
-    if pretrained_books is not None:
-        # --reuse-sidecars iteration mode (round 11, VERDICT r10 #7)
-        books = pretrained_books
-    elif distributed_train:
-        # round 11 (VERDICT r10 #4): Lloyd's over a distributed
-        # sample — no driver-memory bound; works on the rotated
-        # enc_src too (the rotation is applied upstream)
-        books = pq_train_distributed(enc_src, m=m, ksub=ksub,
-                                     seed=seed, sample_n=sample_n,
-                                     vec_col=index.vec_col)
-    else:
-        books = pq_train(enc_src, m=m, ksub=ksub, seed=seed,
-                         sample_n=sample_n, vec_col=index.vec_col)
-    enc = pq_encode(enc_src, books, id_col=index.id_col,
-                    vec_col=index.vec_col, keep_cols=("partition_id",))
-    path = os.path.join(index.version_dir, "pq")
-    (enc.write.mode("overwrite").partitionBy("partition_id")
-        .parquet(path))
-    np.save(os.path.join(index.version_dir, "pq_codebooks.npy"), books)
-    rot_path = os.path.join(index.version_dir, "pq_rotation.npz")
-    if rotate:
-        np.savez(rot_path, mean=rot["mean"],
-                 components=rot["components"])
-    elif os.path.exists(rot_path):
-        os.unlink(rot_path)   # plain rebuild replaces a rotated sidecar
-    snap_path = os.path.join(index.version_dir, "pq_centroids.npz")
-    if residual:
-        save_residual_snapshot(index.version_dir, enc_cents)
-    elif os.path.exists(snap_path):
-        os.unlink(snap_path)  # plain rebuild replaces a residual one
-    for stale in ("pq_local_books.npz", "sq8_params.npz"):
-        sp = os.path.join(index.version_dir, stale)
-        if os.path.exists(sp):
-            os.unlink(sp)     # global rebuild replaces local/sq8
-    import shutil as _shutil
+        # global codebooks. The rotation (OPQ init, or an iterative
+        # refinement on a bounded seeded sample — a d×d rotation
+        # needs far fewer rows than ksub·m centroids) is fitted on
+        # the ENCODE source: residuals when residual=True, since
+        # their distribution is what the books model.
+        out = None
+        if rotate and eta is not None and opq_iters:
+            Xs, Xhs = _aniso_sample(src, index.vec_col, seed, 25_000,
+                                    cents)
+            model = aniso_opq_refine_local(Xs, Xhs, m=m, ksub=ksub,
+                                           eta=eta,
+                                           opq_iters=int(opq_iters),
+                                           seed=seed, parallel_init=True)
+            # the joint refinement already trained books on the same
+            # bounded sample aniso_pq_train would draw
+            out = model["books"]
+        elif rotate and opq_iters > 0:
+            from quake_vector_search_spark.operators.kmeans import (
+                _seeded_sample,
+            )
 
-    _shutil.rmtree(_books_table_dir(index.version_dir),
-                   ignore_errors=True)
-    with open(os.path.join(index.version_dir, "pq_meta.json"),
-              "w") as fh:
-        meta_pl = {"residual": bool(residual), "m": m,
-                   "ksub": int(books.shape[1])}
+            _, samp = _seeded_sample(src, index.vec_col, index.id_col,
+                                     min(sample_n, 25_000), seed)
+            model = opq_refine_local(samp, m=m, ksub=ksub,
+                                     opq_iters=opq_iters, seed=seed,
+                                     parallel_init=True)
+        elif rotate:
+            model = fit_pca(src, vec_col=index.vec_col)
+        if rotate:
+            art["rotation"] = {"mean": model["mean"],
+                               "components": model["components"]}
+        rot = art.get("rotation")
+        if eta is None:
+            # Lloyd's over a bounded (or, distributed, a hash-stride)
+            # sample of the rotated encode source
+            trainer = pq_train_distributed if distributed_train else pq_train
+            out = trainer(src if rot is None
+                          else _rotate_corpus(index, src, rot),
+                          m=m, ksub=ksub, seed=seed, sample_n=sample_n,
+                          vec_col=index.vec_col)
+        elif distributed_train:
+            # round 11 (VERDICT r10 #4): sample and alternations stay
+            # distributed; a refined rotation is held fixed and the
+            # books retrain in its space
+            out = aniso_pq_train_distributed(
+                src, m=m, ksub=ksub, eta=eta, seed=seed,
+                vec_col=index.vec_col, cents=cents, rot=rot)
+        elif out is None:
+            out = aniso_pq_train(src, m=m, ksub=ksub, eta=eta,
+                                 seed=seed, vec_col=index.vec_col,
+                                 cents=cents, rot=rot)
+        art["books"] = out
+        meta = {"residual": bool(residual), "m": m,
+                "ksub": int(out.shape[1])}
+        if eta is not None:
+            meta.update(rotate=bool(rotate), seed=int(seed))
+            if opq_iters:
+                # maintenance retrains re-run the score-aware
+                # alternation from this
+                meta["opq_iters"] = int(opq_iters)
         if _dt_intent is not None:
-            # explicit trainer choice carries through retrains;
-            # auto (no key) re-resolves against the grown corpus
-            meta_pl["distributed_train"] = bool(_dt_intent)
-        json.dump(meta_pl, fh)
-    return books
+            # EXPLICIT trainer choice carries through maintenance
+            # retrains; auto (no key) re-resolves at retrain time
+            meta["distributed_train"] = bool(_dt_intent)
+    if eta is not None:
+        meta.update(anisotropic=eta,
+                    ood_min_explained=float(ood_min_explained))
+        if ood_rebuild_rate is not None:
+            # persisted maintenance knob (round 11): maintain() reads
+            # it to decide when streamed-OOD drift warrants a
+            # retraining rebuild instead of carrying books forward
+            meta["ood_rebuild_rate"] = float(ood_rebuild_rate)
+    _publish_sidecar(index, meta, art, _encode_sidecar(index, src, meta,
+                                                       art))
+    return out
 
 
 def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
@@ -2198,34 +1982,6 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
         raise NotImplementedError(
             f"PQ sidecar supports l2|cosine, got {index.metric!r}")
     spark = index.spark
-    # sidecar flavor first: a local (LOPQ) sidecar has no global
-    # pq_codebooks.npy to load — its books live per-partition
-    import json as _json
-
-    meta_path = os.path.join(index.version_dir, "pq_meta.json")
-    residual, local, sq8 = False, False, False
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            _meta = _json.load(fh)
-        residual = bool(_meta.get("residual", False))
-        local = bool(_meta.get("local", False))
-        sq8 = bool(_meta.get("sq8", False))
-    _cached_rots = None
-    sq8_params = None
-    if sq8:
-        # scalar-quantizer sidecar: no codebooks at all — per-dim
-        # bounds stand in for them on the ADC side
-        sq8_params = load_sq8_params(index.version_dir)
-        books = None
-    elif local:
-        if isinstance(books, dict):
-            _cached_rots = load_local_rots(index.version_dir)
-        # else: defer — only the PROBED cells' books are loaded, after
-        # the probe set is known (round 11: driver memory ∝ probed
-        # cells, never the index's cell count)
-    elif books is None:
-        books = np.load(os.path.join(index.version_dir,
-                                     "pq_codebooks.npy"))
     qids, qmat = _collect_queries(queries, "query_id", index.vec_col)
     if index.metric == "cosine" and len(qids):
         # cosine = L2 on unit vectors: the corpus (hence the codebooks
@@ -2234,17 +1990,6 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
         # converted back to similarity at the end
         qmat = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True)
                        + 1e-12)
-    # a rotated (OPQ) sidecar carries its rotation next to the
-    # codebooks; the LUTs must be built in the same space the codes
-    # live in. The rerank below stays in the original space.
-    rot_path = os.path.join(index.version_dir, "pq_rotation.npz")
-    rot_R = None
-    if os.path.exists(rot_path) and len(qids):
-        rz = np.load(rot_path)
-        rot_R = rz["components"]
-        qmat_adc = (qmat - rz["mean"]) @ rot_R.T
-    else:
-        qmat_adc = qmat
     nq = len(qids)
     if nq == 0:
         return (_empty_result(spark, "dist"),
@@ -2275,6 +2020,25 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
         index.hits[pid] = index.hits.get(pid, 0) + len(qlist)
     index.query_counter += nq
 
+    # the sidecar, with only the PROBED cells' per-cell state (local
+    # books and rotations, snapshot centroids — round 11: driver memory
+    # ∝ probed cells, never the index's cell count)
+    meta, art = _load_sidecar(index.version_dir, pids=set(probe_map))
+    if meta is None:
+        raise FileNotFoundError(
+            f"no PQ sidecar in {index.version_dir} — build_pq_sidecar "
+            "first")
+    residual = bool(meta["residual"])
+    local, sq8 = bool(meta.get("local")), bool(meta.get("sq8"))
+    if books is not None:
+        art["local_books" if local else "books"] = books
+    # a rotated (OPQ) sidecar carries its rotation next to the
+    # codebooks; the LUTs must be built in the same space the codes
+    # live in. The rerank below stays in the original space.
+    rot = art.get("rotation")
+    rot_R = None if rot is None else rot["components"]
+    qmat_adc = qmat if rot is None else (qmat - rot["mean"]) @ rot_R.T
+    sq8_params = art.get("sq8")
     # residual sidecars (IVFADC) quantize x − c_p, so the ADC tables
     # must come from q − c_p PER PROBED PARTITION — built inside the
     # kernel (nq_p × ksub × dsub flops per subspace, trivial next to
@@ -2285,29 +2049,25 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
     if sq8:
         mm = dsub = None          # no sub-codes: codes are per-dim
     elif local:
-        if not isinstance(books, dict):
-            # probed-cells-only load (round 11): npz keys decompress
-            # lazily, so only the probe set's books ever materialize
-            books, _cached_rots = _load_local_sidecar_cached(
-                index.version_dir, pids=set(probe_map))
+        books = art["local_books"]
         _any = next(iter(books.values()))
         mm, dsub = _any.shape[0], _any.shape[2]
         books = {p: b for p, b in books.items() if p in probe_map}
         # full-LOPQ sidecar: the probed cell's own rotation must be
         # applied to q − c_p before the LUT build (codes live in the
         # per-cell rotated space); only probed cells' rotations ride
-        local_rots = _cached_rots
+        local_rots = art["local_rots"]
         if local_rots is not None:
             local_rots = {p: r for p, r in local_rots.items()
                           if p in probe_map}
     else:
+        books = art["books"]
         mm, ksub_eff, dsub = books.shape
     if residual:
         # LUTs must use the ENCODE-TIME centroids (snapshot persisted
         # by the sidecar build), not the live ones DML has drifted;
-        # snapshot-less sidecars (pre-snapshot format) fall back to
-        # live centroids, as do partitions created after the snapshot
-        snap = load_residual_snapshot(index.version_dir) or {}
+        # partitions created after the snapshot use their live one
+        snap = art["snapshot"]
         cent_by_pid = {int(p): snap.get(int(p),
                                         index.centroids[i]).copy()
                        for i, p in enumerate(index.part_ids)
@@ -2438,215 +2198,67 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
 
 def refresh_pq_sidecar(index, books: np.ndarray | None = None,
                        force_retrain: bool = False) -> bool:
-    """Re-encode the PQ sidecar for the index's CURRENT version using
-    already-trained codebooks (maintenance moved rows between
-    partitions; the codebooks — a property of the data distribution,
-    not the layout — stay valid). Returns False if this index never had
-    a sidecar. Called by maintenance.maintain() so the hybrid search
-    path survives split/merge without manual rebuilds.
+    """Republish the PQ sidecar for the index's CURRENT version from
+    the previous version's (maintenance moved rows between partitions
+    and bumped the version). Returns False — after one existence
+    check — if the previous version had no sidecar. Called by
+    maintenance.maintain() so the hybrid search path survives
+    split/merge without manual rebuilds.
 
-    ``force_retrain`` (round 11, VERDICT r10 #3): RETRAIN the books
-    from the current corpus instead of carrying them forward —
-    maintenance passes this when the streamed-OOD fallback rate says
-    the carried books no longer model the drifted data. Rebuild
-    hyperparameters come from the previous version's pq_meta.json;
-    parameters a flavor never persisted (e.g. a plain rotated
-    sidecar's opq_iters) fall back to defaults, with the rotation's
-    PRESENCE inferred from the persisted pq_rotation.npz."""
+    Global codebooks, rotations and scalar bounds model the data
+    DISTRIBUTION, not the layout: they carry forward unchanged
+    (``books`` overrides the carried global codebooks), residual
+    flavors re-encode against — and snapshot — the new layout's
+    centroids, and the streamed-OOD drift window carries forward too
+    (round 13, ADVICE r11 #1: drift is measured against the books, so
+    sub-threshold drift must keep accumulating toward the
+    ``ood_rebuild_rate`` trigger across maintenance cycles).
+
+    Per-cell (LOPQ) books are LAYOUT-BOUND — split/merge changed the
+    cells, so carrying them would pair codes with the wrong residual
+    distributions — and ``force_retrain`` (round 11, VERDICT r10 #3:
+    maintenance passes it when the streamed-OOD fallback rate says
+    the carried books no longer model the drifted data) asks for new
+    books outright. Both rebuild through ``build_pq_sidecar`` with the
+    hyperparameters in the previous pq_meta.json: explicit
+    ``distributed_train`` / ``books_format`` choices are kept, unset
+    ones re-resolve against the corpus as it is now, and a global
+    flavor that never recorded ``rotate`` takes it from the presence
+    of its rotation."""
     import os
 
-    npy = os.path.join(index.version_dir, "pq_codebooks.npy")
     prev_dir = os.path.join(index.workdir, f"v{index.version - 1:04d}")
-    import json
-
-    prev_meta_path = os.path.join(prev_dir, "pq_meta.json")
-    if force_retrain and os.path.exists(prev_meta_path):
-        with open(prev_meta_path) as fh:
-            pm = json.load(fh)
+    meta, art = _load_sidecar(prev_dir, pids=())
+    if meta is None:
+        return False
+    if meta.get("local") or force_retrain:
         build_pq_sidecar(
-            index, m=int(pm.get("m", 8)),
-            ksub=int(pm.get("ksub", 256)),
-            seed=int(pm.get("seed", 99)),
-            residual=bool(pm.get("residual", False)),
-            rotate=bool(pm.get(
-                "rotate",
-                os.path.exists(os.path.join(prev_dir,
-                                            "pq_rotation.npz")))),
-            opq_iters=int(pm.get("opq_iters", 0)),
-            local=bool(pm.get("local", False)),
-            cell_sample_n=int(pm.get("cell_sample_n", 20_000)),
-            sq8=bool(pm.get("sq8", False)),
-            # scalar grid width persists in the meta (round 15): a
-            # drift-retrained SQ4 sidecar must refit on ITS grid, not
-            # silently widen to the sq_bits=8 default
-            sq_bits=int(pm.get("sq_bits", 8)),
-            anisotropic=pm.get("anisotropic"),
-            ood_min_explained=float(pm.get("ood_min_explained",
-                                           0.05)),
-            ood_rebuild_rate=pm.get("ood_rebuild_rate"),
-            # EXPLICIT build-time choices carry forward exactly;
-            # auto intent re-resolves against the corpus as it is
-            # NOW (an index that grew past a scale boundary since
-            # the build picks the scale path on retrain)
-            distributed_train=pm.get("distributed_train"),
-            books_format=(None if pm.get("books_format_auto")
-                          else pm.get("books_format"))
-            if pm.get("local") else "npz")
+            index, m=int(meta["m"]), ksub=int(meta["ksub"]),
+            seed=int(meta.get("seed", 99)),
+            residual=bool(meta["residual"]),
+            rotate=bool(meta.get("rotate", "rotation" in art)),
+            opq_iters=int(meta.get("opq_iters", 0)),
+            local=bool(meta.get("local")),
+            cell_sample_n=int(meta.get("cell_sample_n", 20_000)),
+            sq8=bool(meta.get("sq8")),
+            # a drift-retrained SQ4 sidecar refits on ITS grid
+            sq_bits=int(meta.get("sq_bits", 8)),
+            anisotropic=meta.get("anisotropic"),
+            ood_min_explained=float(meta.get("ood_min_explained", 0.05)),
+            ood_rebuild_rate=meta.get("ood_rebuild_rate"),
+            distributed_train=meta.get("distributed_train"),
+            books_format=(None if meta.get("books_format_auto")
+                          else meta.get("books_format")))
         return True
-    if os.path.exists(prev_meta_path):
-        with open(prev_meta_path) as fh:
-            prev_meta = json.load(fh)
-        if prev_meta.get("sq8"):
-            # SQ8 sidecar: the per-dim bounds model the residual
-            # DISTRIBUTION, not the layout — carry them forward and
-            # re-encode against the new layout's centroids (the
-            # refresh resets the drift window like every residual
-            # rebuild)
-            params = load_sq8_params(prev_dir)
-            enc_cents = {int(p): index.centroids[i].copy()
-                         for i, p in enumerate(index.part_ids)}
-            res_src = _residual_corpus(index, index.read_corpus(),
-                                       enc_cents)
-            enc = _encode_sq8_sidecar(res_src, params,
-                                      index.id_col, index.vec_col)
-            (enc.write.mode("overwrite").partitionBy("partition_id")
-                .parquet(os.path.join(index.version_dir, "pq")))
-            save_sq8_params(index.version_dir, params)
-            save_residual_snapshot(index.version_dir, enc_cents)
-            with open(os.path.join(index.version_dir,
-                                   "pq_meta.json"), "w") as fh:
-                json.dump(prev_meta, fh)
-            # carried bounds → carried drift window (ADVICE r11 #1)
-            carry_ood_stats(prev_dir, index.version_dir)
-            return True
-        if prev_meta.get("local"):
-            # per-cell (LOPQ) codebooks are LAYOUT-BOUND: split/merge
-            # changed the cells, so carrying books forward would pair
-            # codes with the wrong residual distributions. Retrain on
-            # the new layout with the build-time hyperparameters — the
-            # honest cost of a local sidecar, and still one bounded
-            # grouped-map pass + one encode pass.
-            build_pq_sidecar(index, m=int(prev_meta["m"]),
-                             ksub=int(prev_meta["ksub"]),
-                             seed=int(prev_meta.get("seed", 99)),
-                             residual=True, local=True,
-                             rotate=bool(prev_meta.get("rotate",
-                                                       False)),
-                             opq_iters=int(prev_meta.get("opq_iters",
-                                                         1)),
-                             cell_sample_n=int(
-                                 prev_meta.get("cell_sample_n",
-                                               20_000)),
-                             anisotropic=prev_meta.get("anisotropic"),
-                             ood_min_explained=float(
-                                 prev_meta.get("ood_min_explained",
-                                               0.05)),
-                             ood_rebuild_rate=prev_meta.get(
-                                 "ood_rebuild_rate"),
-                             # explicit format carries; auto intent
-                             # re-resolves on the grown cell count
-                             books_format=(
-                                 None
-                                 if prev_meta.get("books_format_auto")
-                                 else prev_meta.get("books_format")))
-            return True
-    if books is None:
-        # look in the previous version dir (maintain() already bumped)
-        prev = os.path.join(prev_dir, "pq_codebooks.npy")
-        if not os.path.exists(prev):
-            return False
-        books = np.load(prev)
-    # a rotated (OPQ) sidecar carries its rotation forward too — like
-    # the codebooks it models the data distribution, not the layout.
-    # A residual (IVFADC) sidecar re-encodes residuals vs the CURRENT
-    # centroids (maintenance moved them; the codebooks still model the
-    # residual distribution).
-    rot = None
-    prev_rot = os.path.join(prev_dir, "pq_rotation.npz")
-    if os.path.exists(prev_rot):
-        rz = np.load(prev_rot)
-        rot = {"mean": rz["mean"], "components": rz["components"]}
-    residual, aniso = False, None
-    if os.path.exists(prev_meta_path):
-        with open(prev_meta_path) as fh:
-            _pm = json.load(fh)
-        residual = bool(_pm.get("residual", False))
-        aniso = _pm.get("anisotropic")
-    corpus = index.read_corpus()
-    enc_cents = None
-    if residual:
-        # re-encode against the NEW layout's current centroids and
-        # snapshot them — the refresh is exactly the rebuild point
-        # where the drift window resets
-        enc_cents = {int(p): index.centroids[i].copy()
-                     for i, p in enumerate(index.part_ids)}
-        enc_src = _residual_corpus(index, corpus, enc_cents)
-        if rot is not None and aniso is None:
-            # rotated-residual sidecar: the carried rotation models
-            # the residual distribution, which the new layout's
-            # residuals still follow — codes and LUTs stay consistent
-            # because both use the carried R. (The anisotropic path
-            # rotates INSIDE aniso_pq_encode — it needs the unrotated
-            # rows to rebuild the score-parallel direction.)
-            enc_src = _rotate_corpus(index, enc_src, rot)
-    elif rot is not None and aniso is None:
-        enc_src = _rotate_corpus(index, corpus, rot)
-    else:
-        enc_src = corpus
-    if aniso is not None:
-        # anisotropic sidecar: books model the distribution and carry
-        # forward like global codebooks; the re-encode must use the
-        # SAME score-aware assignment the codes were built with —
-        # including the residual composition's original-direction
-        # rebuild from the NEW layout's snapshot, and (round 9) the
-        # carried rotation applied through the loss transport
-        enc = aniso_pq_encode(enc_src, books, eta=float(aniso),
-                              id_col=index.id_col,
-                              vec_col=index.vec_col,
-                              keep_cols=("partition_id",),
-                              cents=enc_cents if residual else None,
-                              rot=rot)
-    else:
-        enc = pq_encode(enc_src, books, id_col=index.id_col,
-                        vec_col=index.vec_col,
-                        keep_cols=("partition_id",))
-    path = os.path.join(index.version_dir, "pq")
-    (enc.write.mode("overwrite").partitionBy("partition_id")
-        .parquet(path))
-    np.save(npy, books)
-    if rot is not None:
-        np.savez(os.path.join(index.version_dir, "pq_rotation.npz"),
-                 mean=rot["mean"], components=rot["components"])
-    if residual:
-        save_residual_snapshot(index.version_dir, enc_cents)
-    meta_out = {"residual": residual, "m": int(books.shape[0]),
-                "ksub": int(books.shape[1])}
-    if os.path.exists(prev_meta_path):
-        # carry an EXPLICIT distributed_train choice across every
-        # carry-books re-encode (auto has no key and re-resolves at
-        # retrain time against the corpus as it is then)
-        if "distributed_train" in _pm:
-            meta_out["distributed_train"] = _pm["distributed_train"]
-    if aniso is not None:
-        meta_out["anisotropic"] = float(aniso)
-        meta_out["rotate"] = rot is not None
-        meta_out["ood_min_explained"] = float(
-            _pm.get("ood_min_explained", 0.05))
-        # carry the retrain hyperparams/knobs across re-encodes so a
-        # later OOD-triggered rebuild reproduces the original build
-        for k in ("seed", "ood_rebuild_rate", "opq_iters"):
-            if k in _pm:
-                meta_out[k] = _pm[k]
-    with open(os.path.join(index.version_dir, "pq_meta.json"),
-              "w") as fh:
-        json.dump(meta_out, fh)
-    # carried books → carried drift window (round 13, ADVICE r11 #1):
-    # the re-encode re-derived every code, but against the SAME books
-    # the drift was measured against — and the batch re-encoder is
-    # unguarded (no per-row fallback counting), so resetting here
-    # silently discarded accumulated sub-threshold drift and the
-    # ood_rebuild_rate trigger could never fire across maintenance
-    # cycles. Only a retrain (build_pq_sidecar) starts a clean window.
+    if books is not None:
+        art["books"] = books
+    src = index.read_corpus()
+    if meta["residual"]:
+        art["snapshot"] = {int(p): index.centroids[i].copy()
+                           for i, p in enumerate(index.part_ids)}
+        src = _residual_corpus(index, src, art["snapshot"])
+    _publish_sidecar(index, meta, art, _encode_sidecar(index, src, meta,
+                                                       art))
     carry_ood_stats(prev_dir, index.version_dir)
     return True
 
@@ -3310,23 +2922,23 @@ def pq_train_distributed(corpus_df: DataFrame, m: int = 8,
     # partial is bit-identical to the re-scanning form.
     from pyspark import StorageLevel
     samp_df = samp_df.persist(StorageLevel.MEMORY_AND_DISK)
-    _, Xi = _seeded_sample(samp_df, vec_col, id_col,
-                           min(init_n, sample_n), seed)
-    d = Xi.shape[1]
-    if d % m != 0:
-        raise ValueError(f"d={d} not divisible by m={m}")
-    dsub = d // m
-    ksub_eff = min(ksub, Xi.shape[0])
-    books = np.empty((m, ksub_eff, dsub), dtype=np.float64)
-    for j in range(m):
-        # 0 refinement iters: seeded init only — the distributed
-        # passes below ARE the Lloyd iterations
-        books[j], _ = local_kmeans(Xi[:, j * dsub:(j + 1) * dsub],
-                                   ksub_eff, 0, seed + 1 + j,
-                                   final_assign=False)
-
-    spark = corpus_df.sparkSession
     try:
+        _, Xi = _seeded_sample(samp_df, vec_col, id_col,
+                               min(init_n, sample_n), seed)
+        d = Xi.shape[1]
+        if d % m != 0:
+            raise ValueError(f"d={d} not divisible by m={m}")
+        dsub = d // m
+        ksub_eff = min(ksub, Xi.shape[0])
+        books = np.empty((m, ksub_eff, dsub), dtype=np.float64)
+        for j in range(m):
+            # 0 refinement iters: seeded init only — the distributed
+            # passes below ARE the Lloyd iterations
+            books[j], _ = local_kmeans(Xi[:, j * dsub:(j + 1) * dsub],
+                                       ksub_eff, 0, seed + 1 + j,
+                                       final_assign=False)
+
+        spark = corpus_df.sparkSession
         for _ in range(iters):
             bc = spark.sparkContext.broadcast(books)
 
@@ -3455,30 +3067,28 @@ def aniso_pq_train_distributed(corpus_df: DataFrame, m: int = 8,
     # trainer's note)
     from pyspark import StorageLevel
     samp_df = samp_df.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # ---- init: plain per-chunk Lloyd's on a bounded driver sample
-    _, Xi = _seeded_sample(samp_df, vec_col, id_col,
-                           min(init_n, sample_n), seed)
-    if rot is not None:
-        Xi = (Xi - rot["mean"]) @ rot["components"].T
-    d = Xi.shape[1]
-    if d % m != 0:
-        raise ValueError(f"d={d} not divisible by m={m}")
-    dsub = d // m
-    ksub_eff = min(ksub, Xi.shape[0])
-    from quake_vector_search_spark.operators.kmeans import (
-        train_subspace_books,
-    )
-    # driver-side init → threaded independent per-chunk fits
-    books = train_subspace_books(Xi, m, ksub, kmeans_iters, seed,
-                                 parallel=True)
-    if eta == 1.0:
-        samp_df.unpersist()
-        return books
-
-    spark = corpus_df.sparkSession
-    stat_width = dsub * dsub + 2 * dsub
     try:
+        # ---- init: plain per-chunk Lloyd's on a bounded driver sample
+        _, Xi = _seeded_sample(samp_df, vec_col, id_col,
+                               min(init_n, sample_n), seed)
+        if rot is not None:
+            Xi = (Xi - rot["mean"]) @ rot["components"].T
+        d = Xi.shape[1]
+        if d % m != 0:
+            raise ValueError(f"d={d} not divisible by m={m}")
+        dsub = d // m
+        ksub_eff = min(ksub, Xi.shape[0])
+        from quake_vector_search_spark.operators.kmeans import (
+            train_subspace_books,
+        )
+        # driver-side init → threaded independent per-chunk fits
+        books = train_subspace_books(Xi, m, ksub, kmeans_iters, seed,
+                                     parallel=True)
+        if eta == 1.0:
+            return books
+
+        spark = corpus_df.sparkSession
+        stat_width = dsub * dsub + 2 * dsub
         for _ in range(alts):
             bc = spark.sparkContext.broadcast((books, cents, rot))
 

@@ -1411,10 +1411,10 @@ def stream_async_maintenance(spark, sf_dir):
         build_pq_sidecar,
     )
     from quake_vector_search_spark.streaming.ingest import (
-        _journal_dir,
         finish_async_maintenance,
         ingest_stream,
     )
+    from quake_vector_search_spark.windowing import _journal_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
     run = uuid.uuid4().hex[:8]
@@ -1526,9 +1526,11 @@ def stream_reinsert_window_close(spark, sf_dir):
 
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.streaming.ingest import (
+        _start_async_maintenance,
+    )
+    from quake_vector_search_spark.windowing import (
         _delete_journal_dir,
         _journal_dir,
-        _start_async_maintenance,
         _window_marker_path,
     )
 

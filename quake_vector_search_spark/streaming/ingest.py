@@ -27,6 +27,21 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from quake_vector_search_spark.operators.ivf import IVFIndex
+from quake_vector_search_spark.windowing import (
+    _clear_window_marker,
+    _delete_journal_dir,
+    _final_delete_ids,
+    _journal_dir,
+    _other_handle_window_in_process,
+    _refuse_if_foreign_window,
+    _register_open_window,
+    _replay_delete_journal,
+    _unregister_open_window,
+    _window_lock,
+    _window_marker_path,
+    _window_open_fence,
+    _write_window_marker,
+)
 
 
 def _load_books_cache(index: IVFIndex, books_cache: dict) -> bool:
@@ -34,119 +49,42 @@ def _load_books_cache(index: IVFIndex, books_cache: dict) -> bool:
     ``books_cache`` — False when the version has no sidecar. Codebooks
     are cached per version dir: maintenance bumps the version (and
     re-encodes the sidecar itself), after which the next batch picks up
-    the new version's codebooks. Shared by the driver micro-batch
-    appender and the distributed backfill appender."""
-    import json
-
+    the new version's codebooks. The cache is keyed on the sidecar's
+    staleness tag (files' mtime and size, md5 of the params head and
+    of the meta — see ``_sidecar_tag``), so a same-flavor rebuild into
+    the same version dir (bench does plain→residual→LOPQ in one dir)
+    invalidates a live stream's cached books too (ADVICE r7/r8).
+    Shared by the driver micro-batch appender and the distributed
+    backfill appender."""
     from quake_vector_search_spark.operators.quantization import (
-        _books_table_files,
+        _load_sidecar,
+        _sidecar_tag,
+        load_local_book_pids,
     )
 
-    npy = os.path.join(index.version_dir, "pq_codebooks.npy")
-    local_npz = os.path.join(index.version_dir, "pq_local_books.npz")
-    sq8_npz = os.path.join(index.version_dir, "sq8_params.npz")
-    tbl_files = _books_table_files(index.version_dir)
-    if os.path.exists(sq8_npz):
-        cache_key = sq8_npz       # scalar-quantizer sidecar
-    elif tbl_files:
-        cache_key = tbl_files     # local (LOPQ) sidecar, table format
-    elif os.path.exists(local_npz):
-        cache_key = local_npz     # local (LOPQ) sidecar
-    elif os.path.exists(npy):
-        cache_key = npy           # global-codebook sidecar
-    else:
+    tag = _sidecar_tag(index.version_dir)
+    if tag is None:
         return False
-    # key on path, mtimes, sizes AND a content hash of pq_meta.json:
-    # a same-flavor sidecar rebuild into the same version dir (bench
-    # does plain→residual→LOPQ in one dir) must invalidate a live
-    # stream's cached books, or appended codes go inconsistent with
-    # the on-disk codebooks/meta — mirroring the query side's
-    # _load_local_sidecar_cached (ADVICE r7). Two rebuilds inside the
-    # filesystem timestamp granularity defeat mtime alone (ADVICE r8),
-    # so the tag also carries the byte sizes and the md5 of the tiny
-    # meta file — flavor/params changes always rewrite pq_meta.json.
-    import hashlib
-
-    meta_path = os.path.join(index.version_dir, "pq_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path, "rb") as fh:
-            meta_sig = hashlib.md5(fh.read()).hexdigest()
-    else:
-        meta_sig = None
-    # first 64 KiB of the sidecar params file: identical meta + same
-    # byte size can still hide retrained books; their leading bytes
-    # practically cannot match across retrains, and 64 KiB per
-    # micro-batch is noise next to the encode itself. A TABLE-format
-    # sidecar's tag is its file set + sizes + the first file's head
-    # (appends add files; rebuilds replace the set).
-    if isinstance(cache_key, list):
-        with open(cache_key[0], "rb") as fh:
-            books_sig = hashlib.md5(fh.read(65536)).hexdigest()
-        cache_tag = (tuple((os.path.basename(f), os.path.getsize(f))
-                           for f in cache_key), books_sig, meta_sig)
-    else:
-        with open(cache_key, "rb") as fh:
-            books_sig = hashlib.md5(fh.read(65536)).hexdigest()
-        cache_tag = (cache_key, os.path.getmtime(cache_key),
-                     os.path.getsize(cache_key), books_sig, meta_sig)
-    if books_cache.get("path") != cache_tag:
-        from quake_vector_search_spark.operators.quantization import (
-            load_local_books,
-        )
-
-        books_cache["path"] = cache_tag
-        meta = {}
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                meta = json.load(fh)
-        books_cache["meta"] = meta
-        books_cache["residual"] = bool(meta.get("residual", False))
-        books_cache["local"] = bool(meta.get("local", False))
-        books_cache["sq8"] = bool(meta.get("sq8", False))
-        if books_cache["sq8"]:
-            from quake_vector_search_spark.operators.quantization import (  # noqa: E501
-                load_sq8_params,
-            )
-
-            books_cache["sq8_params"] = load_sq8_params(
-                index.version_dir)
-            books_cache["books"] = None
-            books_cache["rotation"] = None
-            books_cache["local_rots"] = None
-        elif books_cache["local"]:
-            # per-cell books, loaded LAZILY (round 11): the appender
-            # only ever needs the batch's cells — book_pids (a
-            # books-free pid-set read) answers never-seen detection,
-            # and _ensure_local_books materializes just the cells a
-            # batch touches. A GLOBAL rotation never applies to a
-            # local sidecar — full-LOPQ rotations are per-cell and
-            # ride with the books.
-            from quake_vector_search_spark.operators.quantization import (  # noqa: E501
-                load_local_book_pids,
-            )
-
+    if books_cache.get("path") != tag:
+        # per-cell state loads lazily: the snapshot on the first
+        # residual batch (_ensure_residual_snapshot), local books per
+        # touched cell (_ensure_local_books; round 11 — book_pids, a
+        # books-free pid-set read, answers never-seen detection). A
+        # rotated (OPQ) sidecar's streamed vectors are projected like
+        # the queries; full-LOPQ rotations are per-cell and ride with
+        # the books.
+        meta, art = _load_sidecar(index.version_dir, pids=())
+        local = bool(meta.get("local"))
+        books_cache.update(
+            path=tag, meta=meta, residual=bool(meta["residual"]),
+            local=local, sq8=bool(meta.get("sq8")),
+            sq8_params=art.get("sq8"),
+            books={} if local else art.get("books"),
+            rotation=art.get("rotation"),
+            local_rots={} if local and meta.get("rotate") else None)
+        if local:
             books_cache["book_pids"] = load_local_book_pids(
                 index.version_dir)
-            books_cache["books"] = {}
-            books_cache["local_rots"] = ({} if meta.get("rotate")
-                                         else None)
-            books_cache["rotation"] = None
-        else:
-            books_cache["books"] = np.load(npy)
-            # A rotated (OPQ) sidecar's codebooks live in the
-            # PCA-rotated space; streamed vectors must be projected the
-            # same way or their codes are garbage in the ADC candidate
-            # stage (queries ARE rotated by knn_ivf_pq, so unrotated
-            # appends silently mis-rank).
-            rot_path = os.path.join(index.version_dir,
-                                    "pq_rotation.npz")
-            if os.path.exists(rot_path):
-                rz = np.load(rot_path)
-                books_cache["rotation"] = {
-                    "mean": rz["mean"],
-                    "components": rz["components"]}
-            else:
-                books_cache["rotation"] = None
         # version changed → the residual snapshot belongs to the OLD
         # version dir; drop it so the residual branch reloads (and
         # extends) the new version's snapshot
@@ -166,7 +104,7 @@ def _ensure_residual_snapshot(index: IVFIndex, pids: np.ndarray,
     )
     snap = books_cache.get("snapshot")
     if snap is None:
-        snap = load_residual_snapshot(index.version_dir) or {}
+        snap = load_residual_snapshot(index.version_dir)
         books_cache["snapshot"] = snap
     pos_of = {int(p): i for i, p in enumerate(index.part_ids)}
     new_pids = {int(p) for p in pids} - set(snap)
@@ -219,7 +157,7 @@ def _encode_with_books(vecs: np.ndarray, pids: np.ndarray,
 
         p = books_cache["sq8_params"]
         return sq8_encode_local(enc_vecs, p["vmin"], p["scale"],
-                                int(p.get("levels", 256)))
+                                int(p["levels"]))
     if books_cache["meta"].get("anisotropic") is not None:
         from quake_vector_search_spark.operators.quantization import (
             aniso_encode_streamed,
@@ -809,35 +747,6 @@ def _append_pq_codes_distributed(index: IVFIndex, routed: DataFrame,
         )
         bump_ood_stats(index.version_dir, acc_n.value, acc_ood.value)
     return "done"
-
-
-# Window-contract primitives (marker, per-handle transition lock,
-# journals, sequence stamps, open-window registry) moved to the
-# neutral ``quake_vector_search_spark.windowing`` module (round 16,
-# VERDICT r15 #4) so ``operators/ivf.py`` imports them top-level
-# instead of through deferred circular imports. Re-exported here so
-# existing imports and test monkeypatches keep working.
-from quake_vector_search_spark.windowing import (  # noqa: F401,E402
-    _OPEN_WINDOWS,
-    _clear_window_marker,
-    _delete_journal_dir,
-    _final_delete_ids,
-    _foreign_write_guard,
-    _journal_batch,
-    _journal_batch_distributed,
-    _journal_deletes,
-    _journal_dir,
-    _next_journal_seq,
-    _other_handle_window_in_process,
-    _refuse_if_foreign_window,
-    _register_open_window,
-    _replay_delete_journal,
-    _unregister_open_window,
-    _window_lock,
-    _window_marker_path,
-    _window_open_fence,
-    _write_window_marker,
-)
 
 
 def _replay_ingest_journal(index: IVFIndex, books_cache: dict,
@@ -1436,17 +1345,17 @@ def ingest_stream(index: IVFIndex, vectors_stream: DataFrame,
     c2:80-81). This is what closes the streamed-OOD control loop
     end-to-end: the appenders count drift into ``ood_stats.json``,
     and the scheduled ``maintain(ood_rebuild_rate=...)`` — or the
-    knob persisted in pq_meta.json at build — retrains the books when
+    knob persisted in the sidecar meta at build — retrains the books when
     the rate crosses it, with no operator in the loop. Default None
     keeps the historical behavior (caller schedules maintenance).
     The books cache self-invalidates on the version bump (it keys on
-    the version dir's sidecar file paths), so post-maintenance
+    the version dir's sidecar tag), so post-maintenance
     batches encode against the refreshed books automatically.
 
     The cadence is a PERSISTED index knob (round 13, continuity note
     #5): an explicit ``maintain_every_n_batches`` is recorded in the
     index's stats.json (riding every ``save_meta`` republish, like
-    ``ood_rebuild_rate`` rides pq_meta.json), and a later
+    ``ood_rebuild_rate`` rides the sidecar meta), and a later
     ``ingest_stream`` call that leaves the arg ``None`` — e.g. a
     restarted stream re-attaching after ``IVFIndex.load`` — resumes
     that cadence without the caller re-passing it. ``maintain_kwargs``

@@ -26,10 +26,12 @@ import quake_vector_search_spark.operators.maintenance as maint_mod  # noqa: E40
 from quake_vector_search_spark.operators.ivf import IVFIndex  # noqa: E402,E501
 from quake_vector_search_spark.operators.workload import make_dataset  # noqa: E402,E501
 from quake_vector_search_spark.streaming.ingest import (  # noqa: E402
+    ingest_stream,
+)
+from quake_vector_search_spark.windowing import (  # noqa: E402
     _delete_journal_dir,
     _journal_dir,
     _window_marker_path,
-    ingest_stream,
 )
 
 

@@ -10,6 +10,11 @@ copy of the version is digested the same way. The digests in
 refactor of the writer or the reader cannot move a code, a book or a
 bound unnoticed.
 
+A second, fast-lane test drives the writer's file set and the
+maintenance refresh: a rebuild over another flavor leaves exactly the
+new flavor's files, and after ``maintain()`` carried artifacts equal
+the previous version's while per-cell books cover the new layout.
+
 Regenerate (only when a format change is intended):
     python tests/test_sidecar_format.py --write
 """
@@ -163,6 +168,86 @@ def test_sidecar_golden_digest(spark, tmp_path, flavor):
     with open(DIGESTS) as fh:
         want = json.load(fh)[flavor]
     assert _flavor_digests(spark, str(tmp_path), flavor) == want
+
+
+# flavor -> (index metric, kwargs, sidecar entries of its version dir)
+REFRESH_FLAVORS = {
+    "plain": ("l2", {}, {"pq_codebooks.npy"}),
+    "residual": ("l2", {"residual": True},
+                 {"pq_codebooks.npy", "pq_centroids.npz"}),
+    "rotate_residual": ("l2", {"rotate": True, "residual": True},
+                        {"pq_codebooks.npy", "pq_rotation.npz",
+                         "pq_centroids.npz"}),
+    "local": ("l2", {"local": True, "residual": True},
+              {"pq_local_books.npz", "pq_centroids.npz"}),
+    "local_rotate": ("l2", {"local": True, "residual": True,
+                            "rotate": True},
+                     {"pq_local_books.npz", "pq_centroids.npz"}),
+    "sq4": ("l2", {"sq8": True, "sq_bits": 4},
+            {"sq8_params.npz", "pq_centroids.npz"}),
+    "aniso_residual": ("cosine", {"anisotropic": 3.0, "residual": True},
+                       {"pq_codebooks.npy", "pq_centroids.npz"}),
+}
+SIDECAR_ENTRIES = {"pq", "pq_meta.json", "pq_codebooks.npy",
+                   "pq_rotation.npz", "pq_local_books.npz",
+                   "pq_local_books_tbl", "sq8_params.npz",
+                   "pq_centroids.npz"}
+
+
+def _arrays(path: str) -> dict:
+    z = np.load(path)
+    if isinstance(z, np.ndarray):
+        return {"": z.tobytes()}
+    return {k: z[k].tobytes() for k in z.files}
+
+
+@pytest.mark.parametrize("flavor", sorted(REFRESH_FLAVORS))
+def test_rebuild_replaces_flavor_and_maintain_refreshes(spark, tmp_path,
+                                                       flavor):
+    """A rebuild over another flavor leaves exactly this flavor's
+    files; maintain() then republishes the sidecar on the new layout:
+    global books, rotations and scalar bounds carry forward unchanged,
+    per-cell books retrain for the new cells."""
+    from quake_vector_search_spark.operators.ivf import IVFIndex
+    from quake_vector_search_spark.operators.maintenance import maintain
+    from quake_vector_search_spark.operators.quantization import (
+        build_pq_sidecar,
+        load_local_books,
+    )
+    from quake_vector_search_spark.operators.workload import make_dataset
+
+    metric, kwargs, files = REFRESH_FLAVORS[flavor]
+    corpus = make_dataset(spark, 400, d=16, n_clusters=4, seed=67)
+    idx = IVFIndex.build(corpus, str(tmp_path / "ivf"), coarse_k=3,
+                         base_k=2, metric=metric)
+    # first a flavor leaving files this one must remove
+    prior = ({"rotate": True, "residual": True}
+             if kwargs.get("local") or kwargs.get("sq8") else
+             {"local": True, "residual": True, "rotate": True,
+              "books_format": "table"})
+    build_pq_sidecar(idx, m=4, ksub=16, seed=7, **prior)
+    build_pq_sidecar(idx, m=4, ksub=16, seed=7, **kwargs)
+    sidecar = files | {"pq", "pq_meta.json"}
+    assert set(os.listdir(idx.version_dir)) & SIDECAR_ENTRIES == sidecar
+
+    old_dir, old_pids = idx.version_dir, {int(p) for p in idx.part_ids}
+    with open(os.path.join(old_dir, "pq_meta.json")) as fh:
+        old_meta = json.load(fh)
+    out = maintain(idx, split_size=48, merge_size=0)
+    assert out["pq_refreshed"] and out["splits"]
+    assert set(os.listdir(idx.version_dir)) & SIDECAR_ENTRIES == sidecar
+    with open(os.path.join(idx.version_dir, "pq_meta.json")) as fh:
+        assert json.load(fh) == old_meta
+    assert (spark.read.parquet(os.path.join(idx.version_dir, "pq"))
+            .count() == idx.read_corpus().count())
+    new_pids = {int(p) for p in idx.part_ids}
+    assert new_pids != old_pids
+    if kwargs.get("local"):
+        assert set(load_local_books(idx.version_dir)) == new_pids
+        return
+    for f in files - {"pq_centroids.npz"}:
+        assert (_arrays(os.path.join(idx.version_dir, f))
+                == _arrays(os.path.join(old_dir, f))), f
 
 
 if __name__ == "__main__":

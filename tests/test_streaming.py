@@ -1821,9 +1821,7 @@ def test_ood_drift_window_survives_carry_books_maintenance(
         load_ood_stats,
     )
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
-        _append_pq_codes,
-    )
+    from quake_vector_search_spark.streaming.ingest import _append_pq_codes
 
     corpus = make_dataset(spark, 600, d=16, n_clusters=6, seed=33)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_oodc"),
@@ -2248,7 +2246,7 @@ def test_async_maintenance_does_not_stall_ingest(spark, tmp_path,
         q.stop()
     assert idx.version == v0 + 1
     assert idx._async_maint is None
-    from quake_vector_search_spark.streaming.ingest import _journal_dir
+    from quake_vector_search_spark.windowing import _journal_dir
     assert not os.path.isdir(_journal_dir(idx))
     # exactly-once: every streamed id appears once in the corpus and
     # once in the adopted version's sidecar
@@ -2295,10 +2293,10 @@ def test_async_maintenance_failure_surfaces_and_journal_clears(
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.workload import make_dataset
     from quake_vector_search_spark.streaming.ingest import (
-        _journal_dir,
         finish_async_maintenance,
         ingest_stream,
     )
+    from quake_vector_search_spark.windowing import _journal_dir
 
     corpus = make_dataset(spark, 200, d=8, n_clusters=4, seed=45)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_async_err"),
@@ -2369,10 +2367,8 @@ def test_async_window_journals_distributed_batches(spark, tmp_path,
         build_pq_sidecar,
     )
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
-        _journal_dir,
-        ingest_stream,
-    )
+    from quake_vector_search_spark.streaming.ingest import ingest_stream
+    from quake_vector_search_spark.windowing import _journal_dir
 
     corpus = make_dataset(spark, 300, d=8, n_clusters=4, seed=51)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_async_dist"),
@@ -2459,10 +2455,8 @@ def test_delete_during_async_window_survives_swap(spark, tmp_path,
     import quake_vector_search_spark.operators.maintenance as maint_mod
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
-        _delete_journal_dir,
-        ingest_stream,
-    )
+    from quake_vector_search_spark.streaming.ingest import ingest_stream
+    from quake_vector_search_spark.windowing import _delete_journal_dir
 
     corpus = make_dataset(spark, 300, d=8, n_clusters=4, seed=73)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_async_del"),
@@ -2589,10 +2583,10 @@ def test_attach_replays_leftover_journal(spark, tmp_path):
         build_pq_sidecar,
     )
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
+    from quake_vector_search_spark.streaming.ingest import ingest_stream
+    from quake_vector_search_spark.windowing import (
         _journal_batch,
         _journal_dir,
-        ingest_stream,
     )
 
     corpus = make_dataset(spark, 300, d=8, n_clusters=4, seed=69)
@@ -2757,9 +2751,11 @@ def test_replay_recovers_rows_missed_by_the_publish(spark, tmp_path):
     from quake_vector_search_spark.operators.workload import make_dataset
     from quake_vector_search_spark.streaming.ingest import (
         _adopt_index_state,
+        _replay_ingest_journal,
+    )
+    from quake_vector_search_spark.windowing import (
         _journal_batch,
         _journal_dir,
-        _replay_ingest_journal,
     )
 
     corpus = make_dataset(spark, 300, d=8, n_clusters=4, seed=43)
@@ -2877,9 +2873,7 @@ def test_ood_min_explained_knob_persists_and_binds(spark, tmp_path):
         load_residual_snapshot,
     )
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
-        _append_pq_codes,
-    )
+    from quake_vector_search_spark.streaming.ingest import _append_pq_codes
 
     corpus = make_dataset(spark, 600, d=16, n_clusters=6, seed=12)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_knob"),
@@ -3205,9 +3199,7 @@ def test_scale_intent_carries_through_maintenance_retrains(
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.maintenance import maintain
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
-        _append_pq_codes,
-    )
+    from quake_vector_search_spark.streaming.ingest import _append_pq_codes
 
     corpus = make_dataset(spark, 600, d=16, n_clusters=6, seed=33)
 
@@ -3328,11 +3320,11 @@ def test_delete_then_reinsert_in_window_survives_swap(spark, tmp_path,
     import quake_vector_search_spark.operators.maintenance as maint_mod
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
+    from quake_vector_search_spark.streaming.ingest import ingest_stream
+    from quake_vector_search_spark.windowing import (
         _delete_journal_dir,
         _journal_dir,
         _window_marker_path,
-        ingest_stream,
     )
 
     corpus = make_dataset(spark, 300, d=8, n_clusters=4, seed=51)
@@ -3437,10 +3429,10 @@ def test_cross_handle_delete_refused_during_window(spark, tmp_path,
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.workload import make_dataset
     from quake_vector_search_spark.streaming.ingest import (
-        _window_marker_path,
         finish_async_maintenance,
         ingest_stream,
     )
+    from quake_vector_search_spark.windowing import _window_marker_path
 
     corpus = make_dataset(spark, 300, d=8, n_clusters=4, seed=57)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_two_handles"),
@@ -3511,7 +3503,7 @@ def test_final_delete_ids_resolves_by_sequence(spark, tmp_path):
     ``_next_journal_seq``)."""
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
+    from quake_vector_search_spark.windowing import (
         _final_delete_ids,
         _journal_batch,
         _journal_deletes,
@@ -3541,9 +3533,7 @@ def test_adopt_carries_window_search_stats(spark, tmp_path):
     their keeper."""
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
-        _adopt_index_state,
-    )
+    from quake_vector_search_spark.streaming.ingest import _adopt_index_state
 
     corpus = make_dataset(spark, 200, d=8, n_clusters=3, seed=63)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_adopt_hits"),
@@ -3607,9 +3597,9 @@ def test_replay_chain_split_then_merge_exactly_once(spark, tmp_path):
     from quake_vector_search_spark.operators.maintenance import maintain
     from quake_vector_search_spark.streaming.ingest import (
         _adopt_index_state,
-        _journal_batch,
         _replay_ingest_journal,
     )
+    from quake_vector_search_spark.windowing import _journal_batch
 
     d = 8
     rng = np.random.default_rng(67)
@@ -3761,11 +3751,11 @@ def test_crash_recovery_through_real_process_restart(spark, tmp_path):
     import numpy as np
 
     from quake_vector_search_spark.operators.ivf import IVFIndex
-    from quake_vector_search_spark.streaming.ingest import (
+    from quake_vector_search_spark.streaming.ingest import ingest_stream
+    from quake_vector_search_spark.windowing import (
         _delete_journal_dir,
         _journal_dir,
         _window_marker_path,
-        ingest_stream,
     )
 
     helper = os.path.join(os.path.dirname(__file__),
@@ -3842,10 +3832,8 @@ def test_attach_refuses_second_live_writer(spark, tmp_path):
 
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
-        _window_marker_path,
-        ingest_stream,
-    )
+    from quake_vector_search_spark.streaming.ingest import ingest_stream
+    from quake_vector_search_spark.windowing import _window_marker_path
 
     corpus = make_dataset(spark, 150, d=8, n_clusters=2, seed=91)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_two_writers"),
@@ -3902,11 +3890,11 @@ def test_attach_applies_orphan_delete_journal(spark, tmp_path):
 
     from quake_vector_search_spark.operators.ivf import IVFIndex
     from quake_vector_search_spark.operators.workload import make_dataset
-    from quake_vector_search_spark.streaming.ingest import (
+    from quake_vector_search_spark.streaming.ingest import ingest_stream
+    from quake_vector_search_spark.windowing import (
         _delete_journal_dir,
         _journal_deletes,
         _window_marker_path,
-        ingest_stream,
     )
 
     corpus = make_dataset(spark, 150, d=8, n_clusters=2, seed=95)

@@ -897,55 +897,23 @@ def test_pq_train_distributed_parity(spark):
     assert e_dist < 0.5 * mse(b_rand)
 
 
-def test_pretrained_books_rebuild_is_bit_identical(spark, tmp_path):
-    """The --reuse-sidecars contract (round 11, VERDICT r10 #7):
-    rebuilding a global sidecar with ``pretrained_books`` (the books
-    a previous build trained) produces bit-identical codes, meta and
-    snapshot — so the bench's cached-books iteration mode cannot move
-    decision metrics, only training seconds. Unsupported flavors
-    (local / rotate / sq8, whose training produces more state than
-    books) refuse loudly."""
-    import json
-    import os
-
-    import numpy as np
-    import pytest as _pytest
-
-    from quake_vector_search_spark.operators.ivf import IVFIndex
+def test_distributed_trainers_release_sample_on_init_error(spark):
+    """Both distributed trainers persist their training sample before
+    the init phase. An init-phase raise (here ``d % m != 0``) must
+    still unpersist it: Spark's cache manager is empty afterwards."""
     from quake_vector_search_spark.operators.quantization import (
-        build_pq_sidecar,
+        aniso_pq_train_distributed,
+        pq_train_distributed,
     )
     from quake_vector_search_spark.operators.workload import make_dataset
 
-    corpus = make_dataset(spark, 400, d=16, n_clusters=4, seed=9)
-    idx = IVFIndex.build(corpus, str(tmp_path / "ivf_pre"),
-                         coarse_k=2, base_k=2)
-
-    def snapshot_sidecar():
-        rows = {int(r["vec_id"]): (tuple(r["pq_codes"]),
-                                   int(r["partition_id"]))
-                for r in spark.read
-                .parquet(f"{idx.version_dir}/pq").collect()}
-        with open(os.path.join(idx.version_dir,
-                               "pq_meta.json")) as fh:
-            return rows, json.load(fh)
-
-    books = build_pq_sidecar(idx, m=4, ksub=16, seed=7,
-                             residual=True)
-    rows1, meta1 = snapshot_sidecar()
-    books2 = build_pq_sidecar(idx, m=4, ksub=16, seed=7,
-                              residual=True, pretrained_books=books)
-    rows2, meta2 = snapshot_sidecar()
-    assert np.array_equal(books, books2)
-    assert rows1 == rows2
-    assert meta1 == meta2
-
-    with _pytest.raises(ValueError, match="unrotated global"):
-        build_pq_sidecar(idx, m=4, ksub=16, residual=True,
-                         local=True, pretrained_books=books)
-    with _pytest.raises(ValueError, match="unrotated global"):
-        build_pq_sidecar(idx, m=4, ksub=16, rotate=True,
-                         pretrained_books=books)
+    corpus = make_dataset(spark, 200, d=16, n_clusters=4, seed=3)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for trainer in (pq_train_distributed, aniso_pq_train_distributed):
+        spark.catalog.clearCache()
+        with pytest.raises(ValueError, match="not divisible"):
+            trainer(corpus, m=3, ksub=8, seed=5)
+        assert cache.isEmpty(), trainer.__name__
 
 
 @pytest.mark.slow
@@ -1228,192 +1196,6 @@ def test_aniso_opq_refine_beats_eigalloc_init():
     np.testing.assert_array_equal(again["books"], out["books"])
 
 
-def _collect_codes(spark, version_dir):
-    import numpy as np
-
-    rows = (spark.read.parquet(f"{version_dir}/pq")
-            .orderBy("vec_id").collect())
-    return (np.array([r["vec_id"] for r in rows]),
-            np.vstack([r["pq_codes"] for r in rows]),
-            np.array([r["partition_id"] for r in rows]))
-
-
-def test_pretrained_payload_roundtrip_aniso_opq_rotated(spark,
-                                                        tmp_path,
-                                                        monkeypatch):
-    """Round 14 (VERDICT r13 #4): the dict pretrained payload lets a
-    rebuild of the aniso × iterative-OPQ sidecar skip the
-    MM-Procrustes alternation AND the score-aware trainer entirely —
-    both are monkeypatched to explode — while producing bit-identical
-    codes, rotation, books and meta. This is what makes the bench's
-    --reuse-sidecars iteration mode cover the rotated rungs."""
-    import json
-    import os
-
-    import numpy as np
-
-    import quake_vector_search_spark.operators.quantization as qz
-    from quake_vector_search_spark.operators.ivf import IVFIndex
-    from quake_vector_search_spark.operators.workload import make_dataset
-
-    corpus = make_dataset(spark, 300, d=16, n_clusters=4, seed=33)
-    idx = IVFIndex.build(corpus, str(tmp_path / "ivf_pre_aniso"),
-                         coarse_k=3, base_k=2, metric="cosine")
-    books0 = qz.build_pq_sidecar(idx, m=4, ksub=16, seed=7,
-                                 anisotropic=3.0, residual=True,
-                                 rotate=True, opq_iters=2)
-    ids0, codes0, pids0 = _collect_codes(spark, idx.version_dir)
-    rz = np.load(os.path.join(idx.version_dir, "pq_rotation.npz"))
-    with open(os.path.join(idx.version_dir, "pq_meta.json")) as fh:
-        meta0 = json.load(fh)
-    payload = {"books": books0.copy(),
-               "rotation": {"mean": rz["mean"].copy(),
-                            "components": rz["components"].copy()}}
-
-    def boom(*a, **kw):
-        raise AssertionError("training ran on the pretrained path")
-
-    monkeypatch.setattr(qz, "aniso_opq_refine_local", boom)
-    monkeypatch.setattr(qz, "aniso_pq_train", boom)
-    monkeypatch.setattr(qz, "aniso_pq_train_distributed", boom)
-    books1 = qz.build_pq_sidecar(idx, m=4, ksub=16, seed=7,
-                                 anisotropic=3.0, residual=True,
-                                 rotate=True, opq_iters=2,
-                                 pretrained_books=payload)
-    ids1, codes1, pids1 = _collect_codes(spark, idx.version_dir)
-    np.testing.assert_array_equal(books1, books0)
-    np.testing.assert_array_equal(ids1, ids0)
-    np.testing.assert_array_equal(codes1, codes0)
-    np.testing.assert_array_equal(pids1, pids0)
-    rz1 = np.load(os.path.join(idx.version_dir, "pq_rotation.npz"))
-    np.testing.assert_array_equal(rz1["mean"], rz["mean"])
-    np.testing.assert_array_equal(rz1["components"], rz["components"])
-    with open(os.path.join(idx.version_dir, "pq_meta.json")) as fh:
-        assert json.load(fh) == meta0
-
-
-def test_pretrained_payload_roundtrip_local_rotated(spark, tmp_path,
-                                                    monkeypatch):
-    """Same round-14 contract for the LAYOUT-BOUND flavor: a full-LOPQ
-    (per-cell books + per-cell rotations) rebuild from the dict
-    payload skips train_local_books and is bit-identical; a payload
-    missing a populated cell is refused (the cheap invariant that
-    catches reusing books across different layouts)."""
-    import os
-
-    import numpy as np
-
-    import quake_vector_search_spark.operators.quantization as qz
-    from quake_vector_search_spark.operators.ivf import IVFIndex
-    from quake_vector_search_spark.operators.workload import make_dataset
-
-    corpus = make_dataset(spark, 300, d=16, n_clusters=4, seed=35)
-    idx = IVFIndex.build(corpus, str(tmp_path / "ivf_pre_lopq"),
-                         coarse_k=3, base_k=2)
-    books0 = qz.build_pq_sidecar(idx, m=4, ksub=16, seed=7,
-                                 residual=True, local=True,
-                                 rotate=True)
-    ids0, codes0, _ = _collect_codes(spark, idx.version_dir)
-    payload = {"local_books": qz.load_local_books(idx.version_dir),
-               "local_rots": qz.load_local_rots(idx.version_dir)}
-
-    def boom(*a, **kw):
-        raise AssertionError("train_local_books ran on the "
-                             "pretrained path")
-
-    monkeypatch.setattr(qz, "train_local_books", boom)
-    books1 = qz.build_pq_sidecar(idx, m=4, ksub=16, seed=7,
-                                 residual=True, local=True,
-                                 rotate=True,
-                                 pretrained_books=payload)
-    ids1, codes1, _ = _collect_codes(spark, idx.version_dir)
-    np.testing.assert_array_equal(ids1, ids0)
-    np.testing.assert_array_equal(codes1, codes0)
-    assert set(books1) == set(books0)
-    for p in books0:
-        np.testing.assert_array_equal(books1[p], books0[p])
-    saved = qz.load_local_books(idx.version_dir)
-    for p in books0:
-        np.testing.assert_array_equal(saved[p], books0[p])
-
-    # layout guard: drop one populated cell from the payload
-    short = dict(payload)
-    short["local_books"] = dict(payload["local_books"])
-    victim = next(iter(short["local_books"]))
-    del short["local_books"][victim]
-    with pytest.raises(ValueError, match="layout-bound"):
-        qz.build_pq_sidecar(idx, m=4, ksub=16, seed=7,
-                            residual=True, local=True, rotate=True,
-                            pretrained_books=short)
-
-
-def test_pretrained_payload_roundtrip_sq8(spark, tmp_path,
-                                          monkeypatch):
-    """The sq8 arm of the round-14 payload contract: a rebuild from
-    {"sq8_params"} skips the bounds fit and is bit-identical."""
-    import numpy as np
-
-    import quake_vector_search_spark.operators.quantization as qz
-    from quake_vector_search_spark.operators.ivf import IVFIndex
-    from quake_vector_search_spark.operators.workload import make_dataset
-
-    corpus = make_dataset(spark, 300, d=16, n_clusters=4, seed=37)
-    idx = IVFIndex.build(corpus, str(tmp_path / "ivf_pre_sq8"),
-                         coarse_k=3, base_k=2)
-    qz.build_pq_sidecar(idx, sq8=True, seed=7)
-    ids0, codes0, pids0 = _collect_codes(spark, idx.version_dir)
-    payload = {"sq8_params": qz.load_sq8_params(idx.version_dir)}
-
-    def boom(*a, **kw):
-        raise AssertionError("fit_sq8_params ran on the pretrained "
-                             "path")
-
-    monkeypatch.setattr(qz, "fit_sq8_params", boom)
-    qz.build_pq_sidecar(idx, sq8=True, seed=7,
-                        pretrained_books=payload)
-    ids1, codes1, pids1 = _collect_codes(spark, idx.version_dir)
-    np.testing.assert_array_equal(ids1, ids0)
-    np.testing.assert_array_equal(codes1, codes0)
-    np.testing.assert_array_equal(pids1, pids0)
-    p0, p1 = payload["sq8_params"], qz.load_sq8_params(
-        idx.version_dir)
-    np.testing.assert_array_equal(p1["vmin"], p0["vmin"])
-    np.testing.assert_array_equal(p1["scale"], p0["scale"])
-
-
-def test_pretrained_payload_gates():
-    """The injection fails loudly on flavor/payload mispairs: a bare
-    array still refuses rotated/local/sq8 (round-11 contract), a dict
-    missing the flavor's artifacts names what's absent, and a books
-    m-mismatch is caught before encoding garbage."""
-    import numpy as np
-
-    from quake_vector_search_spark.operators.quantization import (
-        build_pq_sidecar,
-    )
-
-    class _FakeIdx:
-        metric = "l2"
-
-        def read_corpus(self):
-            return None
-
-    arr = np.zeros((4, 16, 4))
-    with pytest.raises(ValueError, match="bare pretrained_books"):
-        build_pq_sidecar(_FakeIdx(), m=4, rotate=True,
-                         pretrained_books=arr)
-    with pytest.raises(ValueError, match="missing.*rotation"):
-        build_pq_sidecar(_FakeIdx(), m=4, rotate=True,
-                         pretrained_books={"books": arr})
-    with pytest.raises(ValueError, match="missing.*local_books"):
-        build_pq_sidecar(_FakeIdx(), m=4, local=True,
-                         pretrained_books={"books": arr})
-    with pytest.raises(ValueError, match="m=8"):
-        build_pq_sidecar(_FakeIdx(), m=4,
-                         pretrained_books={
-                             "books": np.zeros((8, 16, 2))})
-
-
 def test_aniso_opq_refine_rejects_eta_below_one():
     """ADVICE r13 #2: the MM-Procrustes surrogate is an upper bound
     only because ηI − Wᵢ = (η−1)(I − x̂x̂ᵀ) ⪰ 0 — with η < 1 the
@@ -1542,56 +1324,12 @@ def test_aniso_opq_eta_refused_at_build_call_site(spark, tmp_path):
                      rotate=True, opq_iters=1, anisotropic=1.0)
 
 
-def test_pretrained_local_rots_coverage_gate(spark, tmp_path):
-    """ADVICE r14 low: a dict payload for a rotate=True local build
-    must cover every populated cell's ROTATION, not just its books —
-    a payload missing one cell's rotation previously passed the
-    books gate and failed (or silently mispaired) inside the encode
-    executor task. The refusal is the same layout-bound ValueError
-    the books gate raises, at the call site."""
-    import pytest as _pytest
-
-    from quake_vector_search_spark.operators.ivf import IVFIndex
-    from quake_vector_search_spark.operators.quantization import (
-        build_pq_sidecar,
-        load_local_books,
-        load_local_rots,
-    )
-    from quake_vector_search_spark.operators.workload import make_dataset
-
-    corpus = make_dataset(spark, 300, d=16, n_clusters=4, seed=43)
-    idx = IVFIndex.build(corpus, str(tmp_path / "ivf_rots_gate"),
-                         coarse_k=2, base_k=2, metric="cosine")
-    build_pq_sidecar(idx, m=4, ksub=16, seed=7, local=True,
-                     rotate=True)
-    books = load_local_books(idx.version_dir)
-    rots = load_local_rots(idx.version_dir)
-    assert books and rots
-    victim = sorted(rots)[0]
-    broken = dict(rots)
-    del broken[victim]
-    with _pytest.raises(ValueError,
-                        match="local rotations miss populated"):
-        build_pq_sidecar(idx, m=4, ksub=16, seed=7, local=True,
-                         rotate=True,
-                         pretrained_books={"local_books": books,
-                                           "local_rots": broken})
-    # the full payload reinjects cleanly
-    build_pq_sidecar(idx, m=4, ksub=16, seed=7, local=True,
-                     rotate=True,
-                     pretrained_books={"local_books": books,
-                                       "local_rots": rots})
-
-
 def test_sq4_sidecar_grid_and_payload_guard(spark, tmp_path):
     """SQ4 (round 15, VERDICT r14 #7): the scalar quantizer
     generalizes to a 16-level grid through the per-dim scale alone —
-    codes clip at 15, the params persist their grid width (old
-    8-bit files read back as 256), streamed appends encode on the
-    same grid, and a payload harvested at one width is refused by a
-    build asking another (grid-bound bounds would silently decode
-    17x out of range). The ivf_sq4 facade flavor maps to
-    sq8=True + sq_bits=4."""
+    codes clip at 15, the params persist their grid width, and
+    streamed appends encode on the same grid. The ivf_sq4 facade
+    flavor maps to sq8=True + sq_bits=4."""
     import numpy as np
     import pytest as _pytest
 
@@ -1629,17 +1367,6 @@ def test_sq4_sidecar_grid_and_payload_guard(spark, tmp_path):
     assert appended.count() == 2
     amx = appended.select(F.max(F.array_max("pq_codes"))).first()[0]
     assert amx <= 15, amx
-    # grid-bound payload: an sq4 harvest refused by an sq8 build
-    with _pytest.raises(ValueError, match="grid"):
-        build_pq_sidecar(idx, sq8=True, sq_bits=8,
-                         pretrained_books={"sq8_params": roundtrip})
-    # matching grid reinjects cleanly
-    build_pq_sidecar(idx, sq8=True, sq_bits=4,
-                     pretrained_books={"sq8_params": roundtrip})
-    # pre-round-15 files carry no width and read back as 8-bit
-    np.savez(f"{idx.version_dir}/sq8_params.npz",
-             vmin=roundtrip["vmin"], scale=roundtrip["scale"])
-    assert int(load_sq8_params(idx.version_dir)["levels"]) == 256
     # sq_bits outside {4, 8} refused at the call site
     with _pytest.raises(ValueError, match="sq_bits"):
         build_pq_sidecar(idx, sq8=True, sq_bits=6)

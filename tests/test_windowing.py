@@ -15,25 +15,12 @@ from quake_vector_search_spark.operators.workload import make_dataset
 
 
 def test_windowing_reexports_are_the_same_objects():
-    """The refactor must keep every historical import path working:
-    ``streaming.ingest`` re-exports the primitives, and
-    ``operators.ivf`` binds them top-level (no deferred circular
-    imports left for the window contract)."""
+    """``operators.ivf`` binds the window-contract primitives
+    top-level from ``windowing`` (no deferred circular imports left
+    for the window contract)."""
     import quake_vector_search_spark.operators.ivf as ivf
-    import quake_vector_search_spark.streaming.ingest as ing
     import quake_vector_search_spark.windowing as w
 
-    for name in ("_journal_batch", "_journal_deletes",
-                 "_journal_batch_distributed", "_journal_dir",
-                 "_delete_journal_dir", "_final_delete_ids",
-                 "_replay_delete_journal", "_next_journal_seq",
-                 "_window_lock", "_window_marker_path",
-                 "_write_window_marker", "_clear_window_marker",
-                 "_refuse_if_foreign_window", "_foreign_write_guard",
-                 "_window_open_fence", "_OPEN_WINDOWS",
-                 "_register_open_window", "_unregister_open_window",
-                 "_other_handle_window_in_process"):
-        assert getattr(ing, name) is getattr(w, name), name
     for name in ("_journal_batch", "_journal_deletes",
                  "_journal_batch_distributed", "_window_lock",
                  "_foreign_write_guard"):
@@ -267,8 +254,8 @@ def test_window_open_refuses_over_foreign_marker(spark, tmp_path):
 
     from quake_vector_search_spark.streaming.ingest import (
         _start_async_maintenance,
-        _window_marker_path,
     )
+    from quake_vector_search_spark.windowing import _window_marker_path
 
     corpus = make_dataset(spark, 80, d=8, n_clusters=2, seed=166)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_open_guard"),
@@ -348,9 +335,9 @@ def test_marker_stands_through_swap_replays(spark, tmp_path):
     import quake_vector_search_spark.streaming.ingest as ing
     from quake_vector_search_spark.streaming.ingest import (
         _start_async_maintenance,
-        _window_marker_path,
         finish_async_maintenance,
     )
+    from quake_vector_search_spark.windowing import _window_marker_path
 
     corpus = make_dataset(spark, 200, d=8, n_clusters=3, seed=168)
     idx = IVFIndex.build(corpus, str(tmp_path / "ivf_marker_replay"),
@@ -413,10 +400,12 @@ def test_replay_exception_leaves_marker_for_recovery(spark,
 
     import quake_vector_search_spark.streaming.ingest as ing
     from quake_vector_search_spark.streaming.ingest import (
-        _clear_window_marker,
         _start_async_maintenance,
-        _window_marker_path,
         finish_async_maintenance,
+    )
+    from quake_vector_search_spark.windowing import (
+        _clear_window_marker,
+        _window_marker_path,
     )
 
     corpus = make_dataset(spark, 200, d=8, n_clusters=3, seed=170)
