@@ -59,9 +59,10 @@ def _unit_normalize_expr(vec_col: str):
                        lambda x: (x / (norm + F.lit(1e-12))).cast("float"))
 
 
-# search-scan task sizing: ~100k vectors/task ≈ 25-50 MB of float32
-# payload at d=64-128 — big enough to amortize the Python worker
-# round-trip, small enough to keep thousands of tasks at 100 TB scale
+# probed-scan task sizing (search's corpus scan, knn_ivf_pq's codes
+# scan): ~100k vectors/task ≈ 25-50 MB of float32 payload at d=64-128 —
+# big enough to amortize the Python worker round-trip, small enough to
+# keep thousands of tasks at 100 TB scale
 ROWS_PER_TASK = 100_000
 
 
@@ -1587,7 +1588,9 @@ class IVFIndex:
 
     def _calibration_state_token(self) -> str:
         """Digest of the index state a calibration fit depends on:
-        the published version dir, the partition ids/sizes, AND the
+        the published version (the version dir's name — not its path,
+        so the same index opened through a relative or symlinked path
+        yields the same token), the partition ids/sizes, AND the
         centroid geometry (fine + coarse) — ``partition_scores`` and
         the fitted cutoffs are functions of the centroids, and
         ``recompute_centroids`` (or a net-zero DML round trip) can
@@ -1595,7 +1598,7 @@ class IVFIndex:
         import hashlib
 
         h = hashlib.sha256()
-        h.update(str(self.version_dir).encode())
+        h.update(os.path.basename(self.version_dir).encode())
         h.update(np.ascontiguousarray(self.part_ids).tobytes())
         h.update(np.ascontiguousarray(self.sizes).tobytes())
         h.update(np.ascontiguousarray(self.centroids).tobytes())
@@ -1758,6 +1761,28 @@ class IVFIndex:
                     "under the fitted restriction.")
         return asked
 
+    def _coalesce_probed(self, df: DataFrame,
+                         probe_map: dict) -> DataFrame:
+        """Size a scan of the probed partitions by scanned volume, not
+        directory count: the pruned scan otherwise yields one task per
+        probed partition dir, and every Python task has a fixed cost:
+        a no-op ``mapInArrow`` task costs ~250 ms of process-tree CPU
+        (4-core VM, CPython 3.11, pyspark 4.1). A large share of it is
+        pyspark's per-task ``setup_spark_files`` →
+        ``importlib.invalidate_caches()``, which re-reads the central
+        directory of every zip and jar on the worker's ``sys.path``
+        (~60 ms per call for the spark-core jar and ``pyspark.zip``
+        alone). ⌈probed rows / ROWS_PER_TASK⌉ tasks ≈ a few tens of MB
+        of vectors per task; at 100 TB this still fans out to thousands
+        of tasks, while toy scales collapse to a handful. coalesce() merges file splits
+        without a shuffle. Shared by search()'s corpus scan and
+        knn_ivf_pq's codes scan."""
+        est_rows = int(sum(int(self.sizes[i])
+                           for i, p in enumerate(self.part_ids)
+                           if int(p) in probe_map))
+        n_tasks = max(1, -(-est_rows // ROWS_PER_TASK))
+        return df.coalesce(n_tasks) if n_tasks < len(probe_map) else df
+
     def search(self, queries, k: int = 10, target_recall: float = 0.9,
                max_probe: int = 64,
                query_id_col: str = "query_id",
@@ -1831,8 +1856,7 @@ class IVFIndex:
             self.hits[pid] = self.hits.get(pid, 0) + len(qlist)
         self.query_counter += nq
 
-        union_parts = sorted(probe_map)
-        corpus = self.read_corpus(partition_ids=union_parts) \
+        corpus = self.read_corpus(partition_ids=sorted(probe_map)) \
             .select(self.id_col, self.vec_col, "partition_id")
         if allowed is not None:
             if len(allowed.columns) != 1:
@@ -1842,19 +1866,7 @@ class IVFIndex:
             ids = allowed.select(
                 F.col(allowed.columns[0]).alias(self.id_col))
             corpus = corpus.join(F.broadcast(ids), self.id_col, "semi")
-        # Size tasks by scanned volume, not directory count: the pruned
-        # scan otherwise yields one task per probed partition dir, and a
-        # mostly-empty Python task costs ~20-30 ms of Arrow/worker
-        # round-trip. ROWS_PER_TASK ≈ a few tens of MB of vectors per
-        # task; at 100 TB this still fans out to thousands of tasks,
-        # while toy scales collapse to a handful. coalesce() merges file
-        # splits without a shuffle.
-        est_rows = int(sum(int(self.sizes[i])
-                           for i, p in enumerate(self.part_ids)
-                           if int(p) in probe_map))
-        n_tasks = max(1, -(-est_rows // ROWS_PER_TASK))
-        if n_tasks < len(union_parts):
-            corpus = corpus.coalesce(n_tasks)
+        corpus = self._coalesce_probed(corpus, probe_map)
         bc = self.spark.sparkContext.broadcast((qids, qmat, probe_map))
         id_col, vec_col = self.id_col, self.vec_col
 

@@ -1938,6 +1938,29 @@ def build_pq_sidecar(index, m: int = 8, ksub: int = 256,
     return out
 
 
+def _topk_superset(vals: np.ndarray, kk: int) -> tuple:
+    """(row, col) of every entry of ``vals`` [nq, n] no larger than its
+    row's kk-th smallest value: ties included, so it holds each row's
+    top-kk under any tie-break — ``_merge_topk`` cuts it to size."""
+    thr = (np.partition(vals, kk - 1, axis=1)[:, kk - 1:kk]
+           if vals.shape[1] > kk else np.inf)
+    return np.nonzero(vals <= thr)
+
+
+def _merge_topk(qids: np.ndarray, ids: np.ndarray, dist: np.ndarray,
+                kk: int) -> tuple:
+    """Each query's top-kk rows of (qids, ids, dist) under the engine's
+    (dist asc, id asc) order — the order of the global candidate
+    window, so merging before it never changes what it keeps."""
+    order = np.lexsort((ids, dist, qids))
+    qids, ids, dist = qids[order], ids[order], dist[order]
+    first = np.r_[True, qids[1:] != qids[:-1]]
+    starts = np.flatnonzero(first)
+    rank = np.arange(len(qids)) - starts[np.cumsum(first) - 1]
+    keep = rank < kk
+    return qids[keep], ids[keep], dist[keep]
+
+
 def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
                max_probe: int = 64, oversample: int = 16,
                books: np.ndarray | None = None,
@@ -1946,15 +1969,20 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
                route_cells: int | None = None):
     """ANN search combining BOTH pruning axes: IVF/APS chooses which
     partitions to read (row pruning), PQ codes shrink what each read
-    moves (byte pruning — m bytes/vector vs 4·d). At 100 TB the scan
-    cost drops multiplicatively: (probed fraction) × (m / 4d).
+    moves (byte pruning — m codes/vector, stored as ``array<int>``,
+    i.e. 4·m bytes before Parquet's encoding, vs 4·d bytes of float32).
+    At 100 TB the scan cost drops multiplicatively: (probed fraction) ×
+    (m / d).
 
     Probe selection mirrors IVFIndex.search (APS softmax + adaptive
     nprobe); the scan reads the codes sidecar with the same
-    partition_id pruning; ADC scores per (partition, query); the global
-    top-(k·oversample) candidates rerank at full precision against the
-    live corpus (tombstoned ids drop out at the rerank join). Returns
-    (DataFrame(query_id, vec_id, dist, rank), meta) like IVFIndex.search.
+    partition_id pruning and the same task sizing; ADC scores per
+    (partition, query) on Arrow batches, and each task merges its
+    partitions' candidates into every query's top-(k·oversample); the
+    global top-(k·oversample) candidates rerank at full precision
+    against the live corpus (tombstoned ids drop out at the rerank
+    join). Returns (DataFrame(query_id, vec_id, dist, rank), meta) like
+    IVFIndex.search.
 
     ``allowed`` (round 7): optional single-column id DataFrame — the
     pre-filter pattern on the COMPRESSED path. The id set semi-joins
@@ -1972,8 +2000,8 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
     """
     import os
 
-    from quake_vector_search_spark.functions.vector import (
-        l2_batch, topk_cols_2d)
+    from quake_vector_search_spark.functions.vector import l2_batch
+    from quake_vector_search_spark.operators.kmeans import _group_slices
     from quake_vector_search_spark.operators.knn import (
         _collect_queries, _empty_result)
     from pyspark.sql import Window
@@ -2107,25 +2135,42 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
                 F.col(allowed.columns[0]).alias(id_col))),
             id_col, "semi")
 
+    # one task per ROWS_PER_TASK probed rows, like search()'s scan
+    codes = index._coalesce_probed(codes, probe_map)
+
     def adc_topk(batches):
+        import pyarrow as pa
+
         if residual:
             (qids_l, qmat_l, pmap, books_l, cents_l,
              rots_l, sq8_l) = bc.value
         else:
             qids_l, luts_l, pmap = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        # this task's running top-kk_cand per query, merged after
+        # every batch: the global window then sees nq × tasks × kk_cand
+        # rows instead of one block per (batch, partition)
+        best = (np.empty(0, np.int64), np.empty(0, np.int64),
+                np.empty(0, np.float64))
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            pids = pdf["partition_id"].to_numpy()
-            all_codes = np.vstack(pdf["pq_codes"].to_numpy())
-            all_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            out = []
-            for pid in np.unique(pids):
+            pids = rb.column("partition_id").to_numpy(
+                zero_copy_only=False)
+            # codes from the list's flat values buffer, in the stored
+            # integer dtype — no per-row objects
+            all_codes = (rb.column("pq_codes").flatten()
+                         .to_numpy(zero_copy_only=False)
+                         .reshape(rb.num_rows, -1))
+            all_ids = rb.column(id_col).to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            out = [best]
+            gidx, starts, ends, uniq = _group_slices(pids)
+            for pid, lo, hi in zip(uniq, starts, ends):
                 qidx = pmap.get(int(pid))
                 if not qidx:
                     continue
-                mask = pids == pid
-                cds, ids = all_codes[mask], all_ids[mask]
+                rows = gidx[lo:hi]
+                cds, ids = all_codes[rows], all_ids[rows]
                 approx = np.zeros((len(qidx), cds.shape[0]))
                 if residual:
                     qres = qmat_l[qidx] - cents_l[int(pid)]
@@ -2158,21 +2203,20 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
                 else:
                     for j in range(luts_l.shape[0]):
                         approx += luts_l[j][np.ix_(qidx, cds[:, j])]
-                kk = min(kk_cand, len(ids))
-                part = topk_cols_2d(approx, ids, kk)
-                out.append(pd.DataFrame({
-                    "query_id": np.repeat(qids_l[qidx], kk),
-                    id_col: ids[part].ravel(),
-                    "dist": np.take_along_axis(approx, part, axis=1)
-                              .ravel(),
-                }))
-            if out:
-                yield pd.concat(out)
+                r, c = _topk_superset(approx, kk_cand)
+                out.append((qids_l[qidx][r], ids[c], approx[r, c]))
+            if len(out) > 1:
+                best = _merge_topk(*(np.concatenate(col)
+                                     for col in zip(*out)), kk_cand)
+        if len(best[0]):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col) for col in best],
+                ["query_id", id_col, "dist"])
 
     # NOTE: must not reuse the name `local` here — adc_topk's closure
     # reads the `local` FLAG, and cloudpickle captures the cell at
     # pickle time; shadowing it with a DataFrame is a landmine
-    approx_scores = codes.mapInPandas(
+    approx_scores = codes.mapInArrow(
         adc_topk, f"query_id long, {id_col} long, dist double")
     w = (Window.partitionBy("query_id")
          .orderBy(F.col("dist").asc(), F.col(id_col).asc()))

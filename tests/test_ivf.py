@@ -1,6 +1,7 @@
 """IVF index tests (SURVEY.md §5.2/§5.3): APS properties, recall floor,
 build invariants, persistence round-trip."""
 
+import os
 import shutil
 
 import numpy as np
@@ -284,6 +285,20 @@ def test_restore_calibration_equals_refit(blob_index):
     blob_index.restore_calibration(cal_routed)
     assert (blob_index.calibrate(n_queries=32, route_cells=4)
             == cal_routed)
+
+
+def test_restore_calibration_across_path_spellings(spark, blob_index,
+                                                   tmp_path):
+    # the state token names the version, not the path it was opened
+    # under: a fit reinstalls on the same index opened through a
+    # symlink or a relative path
+    cal = blob_index.calibrate(n_queries=32)
+    link = tmp_path / "link"
+    os.symlink(blob_index.workdir, link)
+    for spelling in (str(link), os.path.relpath(blob_index.workdir)):
+        other = IVFIndex.load(spark, spelling)
+        other.restore_calibration(cal)
+        assert other._calibration == cal
 
 
 def test_calibrated_policy_prunes_and_keeps_recall(spark, blob_index):
