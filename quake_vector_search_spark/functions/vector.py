@@ -155,6 +155,10 @@ def l2_argmin(x: np.ndarray, y: np.ndarray, tile: int = 2048,
     of ~8 full passes. ``threads > 1`` fans the (disjoint, bit-exact)
     tiles over a thread pool — enable on the driver only, never inside
     an executor task whose cores belong to sibling tasks.
+
+    Reentrant: a nested call on the same thread (a signal handler, a
+    callback running under this one) gets fresh buffers instead of the
+    per-thread scratch the outer call is still using.
     """
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
@@ -162,7 +166,21 @@ def l2_argmin(x: np.ndarray, y: np.ndarray, tile: int = 2048,
     m = y.shape[0]
     if n == 0:
         return np.empty(0, dtype=np.int64)
-    xy = _scratch_buf("l2_argmin_xy", (n, m))
+    depth = getattr(_kernel_scratch, "argmin_depth", 0)
+    _kernel_scratch.argmin_depth = depth + 1
+    try:
+        return _l2_argmin(x, y, n, m, tile, threads,
+                          _scratch_buf if depth == 0 else _fresh_buf)
+    finally:
+        _kernel_scratch.argmin_depth = depth
+
+
+def _fresh_buf(key: str, shape: tuple) -> np.ndarray:
+    return np.empty(shape, dtype=np.float64)
+
+
+def _l2_argmin(x, y, n, m, tile, threads, scratch) -> np.ndarray:
+    xy = scratch("l2_argmin_xy", (n, m))
     np.matmul(x, y.T, out=xy)
     x2 = (x * x).sum(axis=1)
     y2 = (y * y).sum(axis=1)[None, :]
@@ -170,8 +188,8 @@ def l2_argmin(x: np.ndarray, y: np.ndarray, tile: int = 2048,
 
     def run_span(lo: int, hi: int) -> None:
         width = min(tile, n)
-        buf = _scratch_buf("l2_argmin_t0", (width, m))
-        tmp = _scratch_buf("l2_argmin_t1", (width, m))
+        buf = scratch("l2_argmin_t0", (width, m))
+        tmp = scratch("l2_argmin_t1", (width, m))
         for s in range(lo, hi, tile):
             e = min(s + tile, hi)
             t = e - s

@@ -59,6 +59,41 @@ def _unit_normalize_expr(vec_col: str):
                        lambda x: (x / (norm + F.lit(1e-12))).cast("float"))
 
 
+def append_partitioned(root: str, table, pids: np.ndarray) -> None:
+    """Append a driver-held Arrow ``table`` to the ``partitionBy(
+    "partition_id")`` directory ``root``, row i going to partition
+    ``pids[i]``: one Parquet file per touched partition, written by
+    pyarrow on the driver (no Spark job). Each file is written under a
+    hidden temp name (leading ``.``, not ``.parquet``), which Spark's
+    file listing and maintenance's file passes skip, then renamed into
+    place; a crash between the two leaves only an ignored temp file.
+    Pages are PLAIN-encoded, as in Spark's own files of unique ids and
+    floats (its writer drops a dictionary that does not compress), so
+    every file of a corpus reads through the same decode path."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    order = np.argsort(pids, kind="stable")
+    pids = np.asarray(pids)[order]
+    table = table.take(order)
+    starts = np.flatnonzero(np.r_[True, pids[1:] != pids[:-1]])
+    ends = np.r_[starts[1:], len(pids)]
+    for s, e in zip(starts, ends):
+        part_dir = os.path.join(root, f"partition_id={int(pids[s])}")
+        os.makedirs(part_dir, exist_ok=True)
+        name = uuid.uuid4().hex
+        tmp = os.path.join(part_dir, f".part-{name}.tmp")
+        try:
+            pq.write_table(table.slice(s, e - s), tmp,
+                           use_dictionary=False)
+            os.replace(tmp, os.path.join(part_dir,
+                                         f"part-{name}.snappy.parquet"))
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+
+
 # probed-scan task sizing (search's corpus scan, knn_ivf_pq's codes
 # scan): ~100k vectors/task ≈ 25-50 MB of float32 payload at d=64-128 —
 # big enough to amortize the Python worker round-trip, small enough to
@@ -613,8 +648,10 @@ class IVFIndex:
         and size are exact, so the update is too).
 
         Micro-batch shape: routing is driver-side NumPy over the
-        broadcast-scale centroid tables; the append is one partitioned
-        parquet write. Streaming ingest wires this into foreachBatch.
+        broadcast-scale centroid tables; the append writes one Parquet
+        file per touched partition from the driver with pyarrow
+        (``append_partitioned``), with no Spark job. Streaming ingest
+        wires this into foreachBatch.
         Returns the assigned partition id per input row so secondary
         structures (the PQ codes sidecar) can append partition-aligned.
 
@@ -760,27 +797,23 @@ class IVFIndex:
         if reinserted:
             staged_version = self._purge_rows(reinserted, publish=False)
 
-        # pyarrow Table straight from the flat buffer: type-exact floats
-        # regardless of the session's Arrow config (the pandas fallback
-        # path rejects numpy.float32 elements in its row verifier)
+        # pyarrow Table straight from the flat buffer; the batch is
+        # already on the driver, so it is written from here, one file
+        # per touched partition, without a Spark job
         import pyarrow as pa
 
-        n, d = vecs.shape
         flat = vecs.astype(np.float32).ravel()
         vec_arr = pa.FixedSizeListArray.from_arrays(
-            pa.array(flat, type=pa.float32()), d).cast(
+            pa.array(flat, type=pa.float32()), vecs.shape[1]).cast(
             pa.list_(pa.float32()))
-        sdf = self.spark.createDataFrame(pa.table({
-            self.id_col: pa.array(ids, type=pa.int64()),
-            self.vec_col: vec_arr,
-            "partition_id": pa.array(pid, type=pa.int64()),
-        }))
         target_corpus = (self.corpus_path if staged_version is None
                          else os.path.join(self.workdir,
                                            f"v{staged_version:04d}",
                                            "corpus"))
-        (sdf.write.mode("append").partitionBy("partition_id")
-         .parquet(target_corpus))
+        append_partitioned(target_corpus, pa.table({
+            self.id_col: pa.array(ids, type=pa.int64()),
+            self.vec_col: vec_arr,
+        }), pid)
         if staged_version is not None:
             # single publish point, after the corpus is complete;
             # save_meta writes stats.json last = the publish marker
@@ -1198,8 +1231,11 @@ class IVFIndex:
         # tombstones change the live corpus without touching files —
         # the calibration fit still goes stale
         self._calibration = None
+        # one IN-list expression string, as in read_corpus/_purge_rows
+        # (Column.isin costs one py4j round trip per literal)
+        ids_sql = ",".join(str(i) for i in ids)
         rows = (self.read_corpus()
-                .where(F.col(self.id_col).isin(ids))
+                .where(F.expr(f"{self.id_col} IN ({ids_sql})"))
                 .select(self.id_col, self.vec_col, "partition_id")
                 .collect())
         by_pid: dict[int, list[np.ndarray]] = {}

@@ -127,7 +127,11 @@ def maintain(idx: IVFIndex,
     # ---- copy-on-write: link every non-split partition dir; dirs that
     # accumulated too many small append files are rewritten instead
     # (the small-file problem: every extra footer costs an open+read on
-    # every future scan AND inflates file-index re-listing after DML)
+    # every future scan AND inflates file-index re-listing after DML).
+    # Small files come from driver-held micro-batch appends (insert(),
+    # the streamed codes sidecar): one file per micro-batch per touched
+    # partition, so a dir crosses COMPACT_FILE_THRESHOLD after that
+    # many appends land in it between rewrites
     compact_pids: list[int] = []
     for pid in idx.part_ids:
         pid = int(pid)

@@ -4,6 +4,7 @@ it; split preserves id sets; merge concatenates; no id lost or
 duplicated through any DML/maintenance sequence.
 """
 
+import os
 import shutil
 
 import numpy as np
@@ -82,6 +83,138 @@ def test_insert_delete_roundtrip_id_conservation(spark, index):
     assert set(new_ids[10:]) <= live
     assert not (set(new_ids[:10]) & live)
     assert len(live) == 500 + 10
+
+
+def _data_files(root):
+    """{partition_id: set of visible .parquet file names} under a
+    partitionBy("partition_id") directory."""
+    out = {}
+    for d in os.listdir(root):
+        if d.startswith("partition_id="):
+            out[int(d.split("=", 1)[1])] = {
+                f for f in os.listdir(os.path.join(root, d))
+                if f.endswith(".parquet") and not f.startswith(".")}
+    return out
+
+
+def _new_files(before, after):
+    return {(p, f) for p, fs in after.items()
+            for f in fs - before.get(p, set())}
+
+
+def _temp_files(root):
+    return [f for _, _, fs in os.walk(root) for f in fs
+            if f.endswith(".tmp")]
+
+
+def test_insert_appends_one_file_per_touched_partition(spark, index):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(19)
+    ids = np.arange(300_000, 300_030, dtype=np.int64)
+    vecs = rng.normal(size=(30, 64))
+    before = _data_files(index.corpus_path)
+    pids = index.insert(ids, vecs)
+    added = _new_files(before, _data_files(index.corpus_path))
+    assert len(added) == len(set(pids.tolist())) > 1
+    for p, f in added:
+        t = pq.read_table(os.path.join(index.corpus_path,
+                                       f"partition_id={p}", f))
+        assert t.column_names == ["vec_id", "embedding"]
+        assert t.schema.field("embedding").type == pa.list_(pa.float32())
+        mask = pids == p
+        np.testing.assert_array_equal(t.column("vec_id").to_numpy(),
+                                      ids[mask])
+        np.testing.assert_array_equal(
+            np.stack(t.column("embedding").to_numpy(zero_copy_only=False)),
+            vecs[mask].astype(np.float32))
+    assert not _temp_files(index.workdir)
+    assert index.read_corpus().count() == 530
+
+
+def test_stray_temp_file_is_ignored(spark, index):
+    """A crash between the append's write and its rename leaves a
+    hidden ``.part-*.tmp`` file in the partition dir: no reader, no
+    maintenance file count, link pass or merge move may pick it up."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quake_vector_search_spark.operators.maintenance import (
+        COMPACT_FILE_THRESHOLD,
+    )
+
+    ids_before = _all_live_ids(index)
+    pid = int(index.part_ids[0])
+    src = os.path.join(index.corpus_path, f"partition_id={pid}")
+    visible = _data_files(index.corpus_path)[pid]
+    stray = pa.table({
+        "vec_id": pa.array([999_999], type=pa.int64()),
+        "embedding": pa.array([[0.0] * 64], type=pa.list_(pa.float32()))})
+    # enough strays to push the dir past the compaction threshold if
+    # they were counted
+    for i in range(COMPACT_FILE_THRESHOLD + 1 - len(visible)):
+        pq.write_table(stray, os.path.join(src, f".part-{i:032x}.tmp"))
+    index.invalidate_corpus()
+    assert index.read_corpus().count() == 500
+    assert _all_live_ids(index) == ids_before
+
+    maintain(index, split_size=10**9, merge_size=0)
+    dst = os.path.join(index.corpus_path, f"partition_id={pid}")
+    # linked, not compacted: the dir holds the same files, as links
+    assert set(os.listdir(dst)) == visible
+    for f in visible:
+        assert os.path.samefile(os.path.join(src, f),
+                                os.path.join(dst, f))
+    assert not _temp_files(index.corpus_path)
+    assert _all_live_ids(index) == ids_before
+
+    # strays in every dir of a version whose next maintain() merges
+    for d in os.listdir(index.corpus_path):
+        pq.write_table(stray, os.path.join(index.corpus_path, d,
+                                           f".part-{0:032x}.tmp"))
+    summary = maintain(index, split_size=10**9, merge_size=10**9)
+    assert summary["merges"]
+    assert not _temp_files(index.corpus_path)
+    assert _all_live_ids(index) == ids_before
+    assert index.read_corpus().count() == 500
+
+
+def test_append_pq_codes_one_file_per_touched_partition(spark, index):
+    import pyarrow.parquet as pq
+
+    from quake_vector_search_spark.operators.quantization import (
+        build_pq_sidecar,
+        load_residual_snapshot,
+    )
+    from quake_vector_search_spark.streaming.ingest import (
+        _append_pq_codes,
+        _encode_with_books,
+    )
+
+    build_pq_sidecar(index, m=8, ksub=16, seed=3, residual=True)
+    rng = np.random.default_rng(23)
+    ids = np.arange(400_000, 400_030, dtype=np.int64)
+    vecs = rng.normal(size=(30, 64))
+    pids = index.insert(ids, vecs)
+    codes_dir = os.path.join(index.version_dir, "pq")
+    before = _data_files(codes_dir)
+    cache: dict = {}
+    assert _append_pq_codes(index, ids, vecs, pids, cache)
+    added = _new_files(before, _data_files(codes_dir))
+    assert len(added) == len(set(pids.tolist())) > 1
+    want = _encode_with_books(vecs, pids, cache,
+                              load_residual_snapshot(index.version_dir))
+    for p, f in added:
+        t = pq.read_table(os.path.join(codes_dir, f"partition_id={p}", f))
+        assert t.column_names == ["vec_id", "pq_codes"]
+        mask = pids == p
+        np.testing.assert_array_equal(t.column("vec_id").to_numpy(),
+                                      ids[mask])
+        np.testing.assert_array_equal(
+            np.stack(t.column("pq_codes").to_numpy(zero_copy_only=False)),
+            want[mask])
+    assert not _temp_files(index.workdir)
 
 
 def test_split_preserves_ids(spark, index):

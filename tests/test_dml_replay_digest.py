@@ -103,11 +103,6 @@ def _replay(spark, workdir: str) -> tuple[str, list]:
     return h.hexdigest(), summaries
 
 
-def replay_digest(spark, workdir: str) -> str:
-    with pinned_conf(spark):
-        return _replay(spark, workdir)[0]
-
-
 def test_dml_replay_golden_digest(spark, tmp_path):
     with open(DIGEST) as fh:
         want = json.load(fh)["replay"]
@@ -130,8 +125,8 @@ if __name__ == "__main__":
         sys.exit("usage: python tests/test_dml_replay_digest.py --write")
     s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS",
                                                    "8")))
-    with tempfile.TemporaryDirectory() as td:
-        got = {"replay": replay_digest(s, td)}
+    with tempfile.TemporaryDirectory() as td, pinned_conf(s):
+        got = {"replay": _replay(s, td)[0]}
     os.makedirs(os.path.dirname(DIGEST), exist_ok=True)
     with open(DIGEST, "w") as fh:
         json.dump(got, fh, indent=1, sort_keys=True)

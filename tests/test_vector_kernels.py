@@ -1556,6 +1556,36 @@ def test_l2_argmin_matches_unfused_form():
     assert l2_argmin(np.empty((0, 4)), y[:4]).shape == (0,)
 
 
+def test_l2_argmin_nested_call_keeps_outer_scratch(monkeypatch):
+    # a nested l2_argmin on the same thread, made while the outer call
+    # holds its per-thread scratch (here: when the outer call asks for
+    # its tile buffer, after its dgemm filled the xy buffer), must
+    # leave the outer result intact and return its own correct argmin
+    from quake_vector_search_spark.functions import vector
+
+    rng = np.random.default_rng(41)
+    x1, x2 = rng.normal(size=(2, 300, 8))
+    y = rng.normal(size=(40, 8))
+    want1 = vector.l2_argmin(x1, y, tile=64)
+    want2 = vector.l2_argmin(x2, y, tile=64)
+    assert not np.array_equal(want1, want2)
+    real = vector._scratch_buf
+    nested = []
+
+    def scratch(key, shape):
+        buf = real(key, shape)
+        if key == "l2_argmin_t0" and not nested:
+            nested.append(None)
+            nested[0] = vector.l2_argmin(x2, y, tile=64)
+        return buf
+
+    monkeypatch.setattr(vector, "_scratch_buf", scratch)
+    got1 = vector.l2_argmin(x1, y, tile=64)
+    assert np.array_equal(nested[0], want2)
+    assert np.array_equal(got1, want1)
+    assert np.array_equal(got1, np.argmin(l2_batch(x1, y), axis=1))
+
+
 def test_aniso_encode_threads_bit_identical():
     # the threaded tile fan-out of the coordinate-descent loss
     # assembly must be bit-identical to the serial form in any
