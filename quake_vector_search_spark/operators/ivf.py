@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from quake_vector_search_spark.functions.vector import (
     l2_argmin,
     l2_batch,
-    topk_cols_2d,
 )
 from quake_vector_search_spark.operators.kmeans import local_kmeans
 from quake_vector_search_spark.windowing import (
@@ -1819,6 +1818,56 @@ class IVFIndex:
         n_tasks = max(1, -(-est_rows // ROWS_PER_TASK))
         return df.coalesce(n_tasks) if n_tasks < len(probe_map) else df
 
+    def _plan_probes(self, qmat: np.ndarray, target_recall: float,
+                     max_probe: int, policy: str, route_cells,
+                     caller: str = "search") -> tuple:
+        """The APS probe plan of one query batch, shared by search()
+        and the IVF+PQ hybrid: the calibrated-restriction check,
+        partition scores, the probe-count rule, then
+        ``(nprobe [nq], probe_map {partition id: query positions},
+        scanned rows)``. Records nothing: ``_probe_meta`` does the hit
+        accounting once the call has passed every check."""
+        if policy == "calibrated":
+            self._check_calibrated_restriction(route_cells, caller=caller)
+        order, probs = self.partition_scores(qmat, route_cells=route_cells)
+        nprobe = self._decide_nprobe(probs, target_recall, max_probe,
+                                     policy)
+        probe_map: dict[int, list[int]] = {}
+        scanned = 0
+        for qi in range(len(qmat)):
+            pos = order[qi, :nprobe[qi]]
+            scanned += int(self.sizes[pos].sum())
+            for p in self.part_ids[pos]:
+                probe_map.setdefault(int(p), []).append(qi)
+        return nprobe, probe_map, scanned
+
+    def _probe_meta(self, nprobe, probe_map: dict, scanned: int) -> dict:
+        """O11 hit accounting for a served batch, and the meta dict
+        search() and the IVF+PQ hybrid return. Called last, so a call
+        refused on its arguments or its sidecar never counts."""
+        for pid, qlist in probe_map.items():
+            self.hits[pid] = self.hits.get(pid, 0) + len(qlist)
+        nq = len(nprobe)
+        self.query_counter += nq
+        return {"nprobe": np.asarray(nprobe).tolist(),
+                "avg_nprobe": float(np.mean(nprobe)) if nq else 0.0,
+                "avg_scanned": scanned / nq if nq else 0.0,
+                "n_partitions": len(self.part_ids)}
+
+    def _semi_allowed(self, df: DataFrame, allowed, caller: str
+                      ) -> DataFrame:
+        """``df`` broadcast-semi-joined to a single-column DataFrame of
+        permitted ids (the filtered-search pre-filter); ``df`` itself
+        when ``allowed`` is None."""
+        if allowed is None:
+            return df
+        if len(allowed.columns) != 1:
+            raise ValueError(
+                f"{caller}(allowed=...): expected a single-column id "
+                f"DataFrame, got columns {allowed.columns}")
+        ids = allowed.select(F.col(allowed.columns[0]).alias(self.id_col))
+        return df.join(F.broadcast(ids), self.id_col, "semi")
+
     def search(self, queries, k: int = 10, target_recall: float = 0.9,
                max_probe: int = 64,
                query_id_col: str = "query_id",
@@ -1826,8 +1875,9 @@ class IVFIndex:
                route_cells: int | None = None,
                allowed: DataFrame | None = None,
                policy: str = "reference"):
-        """O10 (ipynb c1:147-168): APS → partition-pruned scan → local
-        top-k per (partition, query) → global windowed top-k.
+        """O10 (ipynb c1:147-168): APS → partition-pruned scan → per
+        (partition, query) scores, merged into one top-k per query per
+        task (``knn._scan_topk``) → global windowed top-k.
 
         ``policy``: ``"reference"`` (default) treats ``target_recall``
         as a cumulative-softmax-mass threshold exactly like the
@@ -1859,95 +1909,25 @@ class IVFIndex:
         avg_nprobe / avg_scanned; avg_scanned counts probed-partition
         sizes pre-filter). Increments hit stats (O11).
         """
-        from quake_vector_search_spark.operators.knn import _collect_queries
+        from quake_vector_search_spark.operators.knn import (
+            _collect_queries, _empty_result, _l2_kernel, _scan_topk)
         qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
         if self.metric == "cosine" and len(qids):
             qmat = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True)
                            + 1e-12)
-        nq = len(qids)
-        if nq == 0:
-            score_col = "sim" if self.metric == "cosine" else "dist"
-            empty = self.spark.createDataFrame(
-                [], f"query_id long, vec_id long, {score_col} double, "
-                    "rank int")
-            return empty, {"nprobe": [], "avg_nprobe": 0.0,
-                           "avg_scanned": 0.0,
-                           "n_partitions": len(self.part_ids)}
-        if policy == "calibrated":
-            self._check_calibrated_restriction(route_cells)
-        order, probs = self.partition_scores(qmat, route_cells=route_cells)
-        nprobe = self._decide_nprobe(probs, target_recall, max_probe,
-                                     policy)
-
-        # probe sets (positions → stable partition ids)
-        probe_map: dict[int, list[int]] = {}
-        scanned = 0
-        for qi in range(nq):
-            pos = order[qi, :nprobe[qi]]
-            scanned += int(self.sizes[pos].sum())
-            for p in self.part_ids[pos]:
-                probe_map.setdefault(int(p), []).append(qi)
-        # O11 hit accounting
-        for pid, qlist in probe_map.items():
-            self.hits[pid] = self.hits.get(pid, 0) + len(qlist)
-        self.query_counter += nq
-
-        corpus = self.read_corpus(partition_ids=sorted(probe_map)) \
-            .select(self.id_col, self.vec_col, "partition_id")
-        if allowed is not None:
-            if len(allowed.columns) != 1:
-                raise ValueError(
-                    f"search(allowed=...): expected a single-column id "
-                    f"DataFrame, got columns {allowed.columns}")
-            ids = allowed.select(
-                F.col(allowed.columns[0]).alias(self.id_col))
-            corpus = corpus.join(F.broadcast(ids), self.id_col, "semi")
-        corpus = self._coalesce_probed(corpus, probe_map)
-        bc = self.spark.sparkContext.broadcast((qids, qmat, probe_map))
-        id_col, vec_col = self.id_col, self.vec_col
-
-        def local_topk(batches):
-            import pyarrow as pa
-
-            from quake_vector_search_spark.functions.vector import (
-                arrow_vectors_to_matrix,
-            )
-            qids_l, qmat_l, pmap = bc.value
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                all_vecs = arrow_vectors_to_matrix(rb.column(vec_col))
-                all_ids = rb.column(id_col).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                pids = rb.column("partition_id").to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                out_q, out_i, out_d = [], [], []
-                for pid in np.unique(pids):
-                    qidx = pmap.get(int(pid))
-                    if not qidx:
-                        continue
-                    mask = pids == pid
-                    vecs, ids = all_vecs[mask], all_ids[mask]
-                    d2 = l2_batch(qmat_l[qidx], vecs)
-                    kk = min(k, len(ids))
-                    part = topk_cols_2d(d2, ids, kk)
-                    out_q.append(np.repeat(qids_l[qidx], kk))
-                    out_i.append(ids[part].ravel())
-                    out_d.append(np.take_along_axis(d2, part, axis=1)
-                                 .ravel())
-                if out_q:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(np.concatenate(out_q)),
-                         pa.array(np.concatenate(out_i)),
-                         pa.array(np.concatenate(out_d))],
-                        ["query_id", "vec_id", "dist"])
-
-        local = corpus.mapInArrow(
-            local_topk, "query_id long, vec_id long, dist double")
-        w = (Window.partitionBy("query_id")
-             .orderBy(F.col("dist").asc(), F.col("vec_id").asc()))
-        ranked = (local.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k))
+        if len(qids) == 0:
+            return (_empty_result(self.spark, "sim" if self.metric
+                                  == "cosine" else "dist"),
+                    self._probe_meta([], {}, 0))
+        nprobe, probe_map, scanned = self._plan_probes(
+            qmat, target_recall, max_probe, policy, route_cells)
+        corpus = self._semi_allowed(
+            self.read_corpus(partition_ids=sorted(probe_map))
+            .select(self.id_col, self.vec_col, "partition_id"),
+            allowed, "search")
+        ranked = _scan_topk(self._coalesce_probed(corpus, probe_map),
+                            qids, _l2_kernel, qmat, k, id_col="vec_id",
+                            probe_map=probe_map)
         if self.metric == "cosine":
             # unit vectors: d2 = 2 - 2·cos  →  cos = 1 - d2/2; rank by
             # d2 asc ≡ sim desc, tie-break unchanged
@@ -1956,13 +1936,7 @@ class IVFIndex:
         else:
             out = (ranked.withColumn("dist", F.sqrt(F.col("dist")))
                    .select("query_id", "vec_id", "dist", "rank"))
-        meta = {
-            "nprobe": nprobe.tolist(),
-            "avg_nprobe": float(nprobe.mean()) if nq else 0.0,
-            "avg_scanned": scanned / nq if nq else 0.0,
-            "n_partitions": len(self.part_ids),
-        }
-        return out, meta
+        return out, self._probe_meta(nprobe, probe_map, scanned)
 
 
 # ------------------------------------------------------------------ APS

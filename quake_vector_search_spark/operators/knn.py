@@ -1,4 +1,5 @@
-"""Brute-force exact kNN over a DataFrame corpus.
+"""Brute-force exact kNN over a DataFrame corpus, and the top-k scan
+every dense kNN operator shares.
 
 Reference parity: ``exact_topk`` (QUAKE_working_demo.ipynb c1:212-215 /
 adaptive_ivf.mjs:364-369) — full-scan ground truth, also the oracle for
@@ -6,25 +7,26 @@ the IVF path (O15 in SURVEY.md §2.1).
 
 Scale design (the part the reference, a single-process NumPy loop,
 doesn't have): queries are broadcast to every corpus partition; each
-partition computes a *local* top-k per query with one BLAS matmul
-(`l2_batch`, the x²+y²−2xyᵀ trick) and emits at most k rows per query —
-so the single shuffle carries O(partitions · nq · k) candidate rows,
-never the O(n · nq) distance matrix, and never a crossJoin. The global
-stage is a window `row_number() <= k` with deterministic
-(dist ASC, vec_id ASC) tie-break. At 1000 executors this is an
-embarrassingly-parallel scan + a tiny shuffle.
+Arrow batch is scored with one BLAS matmul per query block (`l2_batch`,
+the x²+y²−2xyᵀ trick), and each task merges its batches into one
+running top-k per query and emits that one block — so the single
+shuffle carries O(tasks · nq · k) candidate rows, never the O(n · nq)
+distance matrix, and never a crossJoin. The global stage is a window
+`row_number() <= k` with deterministic (dist ASC, vec_id ASC)
+tie-break. At 1000 executors this is an embarrassingly-parallel scan +
+a tiny shuffle. ``_scan_topk`` is that scan for ``IVFIndex.search``,
+``knn_ivf_pq`` and the brute-force / PQ / BQ family alike.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from quake_vector_search_spark.functions.vector import (
+    arrow_vectors_to_matrix,
     l2_batch,
-    topk_cols_2d,
 )
 
 # Queries are collected to the driver and broadcast — the standard ANN
@@ -56,6 +58,144 @@ def _empty_result(spark, score_col: str) -> DataFrame:
         [], f"query_id long, vec_id long, {score_col} double, rank int")
 
 
+def _topk_superset(vals: np.ndarray, kk: int) -> tuple:
+    """(row, col) of every entry of ``vals`` [nq, n] no larger than its
+    row's kk-th smallest value: ties included, so it holds each row's
+    top-kk under any tie-break — ``_merge_topk`` cuts it to size."""
+    thr = (np.partition(vals, kk - 1, axis=1)[:, kk - 1:kk]
+           if vals.shape[1] > kk else np.inf)
+    return np.nonzero(vals <= thr)
+
+
+def _merge_topk(qids: np.ndarray, ids: np.ndarray, dist: np.ndarray,
+                kk: int) -> tuple:
+    """Each query's top-kk rows of (qids, ids, dist) under the engine's
+    (dist asc, id asc) order — the order of the global candidate
+    window, so merging before it never changes what it keeps."""
+    order = np.lexsort((ids, dist, qids))
+    qids, ids, dist = qids[order], ids[order], dist[order]
+    first = np.r_[True, qids[1:] != qids[:-1]]
+    starts = np.flatnonzero(first)
+    rank = np.arange(len(qids)) - starts[np.cumsum(first) - 1]
+    keep = rank < kk
+    return qids[keep], ids[keep], dist[keep]
+
+
+def _payload_matrix(col) -> np.ndarray:
+    """[rows, width] matrix of an Arrow list column from its flat values
+    buffer: float vectors as float64, integer codes in their stored
+    dtype."""
+    import pyarrow as pa
+
+    if pa.types.is_floating(col.type.value_type):
+        return arrow_vectors_to_matrix(col)
+    return (col.flatten().to_numpy(zero_copy_only=False)
+            .reshape(len(col), -1))
+
+
+def _scan_topk(df: DataFrame, qids: np.ndarray, kernel, state, kk: int,
+               *, id_col: str, score_col: str = "dist",
+               descending: bool = False,
+               probe_map: dict | None = None) -> DataFrame:
+    """The candidate stage of every dense kNN operator: each query's
+    top-``kk`` rows of ``df`` (columns id, payload[, partition_id], in
+    that order), ranked 1..kk by (score asc — or desc — then id asc) in
+    ``rank``; columns query_id, ``id_col``, ``score_col``, rank.
+
+    One ``mapInArrow`` pass: ``(qids, state, probe_map)`` is broadcast
+    once. With a ``probe_map`` ({partition id: query positions}) the
+    rows of a batch are grouped by partition id, each group scored
+    against the queries probing it; without one, the whole batch is
+    one group scored against every query (positions ``slice(None)``).
+    ``kernel(state, payload, positions, partition id)`` yields score
+    blocks whose rows are consecutive runs of those query positions,
+    in order. Every block goes through ``_topk_superset``; each task
+    keeps a running per-query top-kk (``_merge_topk``) and emits it
+    once. Descending scores are negated into the merge and back out —
+    both exact. The global window then cuts every query to kk."""
+    bc = df.sparkSession.sparkContext.broadcast((qids, state, probe_map))
+
+    def scan(batches):
+        import pyarrow as pa
+
+        from quake_vector_search_spark.operators.kmeans import (
+            _group_slices)
+
+        qids_l, st, pmap = bc.value
+        best = (np.empty(0, np.int64), np.empty(0, np.int64),
+                np.empty(0))
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            ids = rb.column(0).to_numpy(zero_copy_only=False) \
+                .astype(np.int64)
+            x = _payload_matrix(rb.column(1))
+            if pmap is None:
+                groups = [(None, None, slice(None))]
+            else:
+                gidx, starts, ends, uniq = _group_slices(
+                    rb.column(2).to_numpy(zero_copy_only=False))
+                groups = [(int(p), gidx[lo:hi], pmap.get(int(p)))
+                          for p, lo, hi in zip(uniq, starts, ends)]
+            out = [best]
+            for pid, rows, qpos in groups:
+                if qpos is None:
+                    continue
+                xs, gids = (x, ids) if rows is None else (x[rows],
+                                                          ids[rows])
+                qsel, q0 = qids_l[qpos], 0
+                for block in kernel(st, xs, qpos, pid):
+                    if descending:
+                        block = -block
+                    r, c = _topk_superset(block, kk)
+                    out.append((qsel[q0 + r], gids[c], block[r, c]))
+                    q0 += block.shape[0]
+            if len(out) > 1:
+                best = _merge_topk(*(np.concatenate(col)
+                                     for col in zip(*out)), kk)
+        if len(best[0]):
+            q, i, s = best
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q), pa.array(i),
+                 pa.array(-s if descending else s, pa.float64())],
+                ["query_id", id_col, score_col])
+
+    local = df.mapInArrow(
+        scan, f"query_id long, {id_col} long, {score_col} double")
+    score = F.col(score_col)
+    w = (Window.partitionBy("query_id")
+         .orderBy(score.desc() if descending else score.asc(),
+                  F.col(id_col).asc()))
+    return (local.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= kk))
+
+
+def _l2_kernel(qmat, x, qpos, pid):
+    yield l2_batch(qmat[qpos], x)
+
+
+def _dot_kernel(qmat, x, qpos, pid):
+    yield qmat[qpos] @ x.T
+
+
+def _cosine_kernel(qmat, x, qpos, pid):
+    q = qmat[qpos]
+    qnorm = np.linalg.norm(q, axis=1) + 1e-12
+    vnorm = np.linalg.norm(x, axis=1) + 1e-12
+    yield (q @ x.T) / (qnorm[:, None] * vnorm[None, :])
+
+
+def _exact_topk(corpus_df, queries, k, id_col, vec_col, query_id_col,
+                query_vec_col, score_col, kernel, descending=False):
+    """The brute-force operators: every query against every row."""
+    qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
+    if len(qids) == 0:
+        return _empty_result(corpus_df.sparkSession, score_col)
+    return _scan_topk(corpus_df.select(id_col, vec_col), qids, kernel,
+                      qmat, k, id_col="vec_id", score_col=score_col,
+                      descending=descending)
+
+
 def knn_bruteforce(corpus_df: DataFrame,
                    queries,
                    k: int = 10,
@@ -70,38 +210,8 @@ def knn_bruteforce(corpus_df: DataFrame,
     1..k per query ordered by (dist ASC, vec_id ASC). ``dist`` is L2
     (or squared L2 when ``squared=True``, matching the reference's d2).
     """
-    spark = corpus_df.sparkSession
-    qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
-    if len(qids) == 0:
-        return _empty_result(spark, "dist")
-    bq = spark.sparkContext.broadcast((qids, qmat))
-
-    def local_topk(batches):
-        qids_l, qmat_l = bq.value
-        nq = qids_l.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            vecs = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            d2 = l2_batch(qmat_l, vecs)                  # [nq, nb]
-            kk = min(k, vecs.shape[0])
-            part = topk_cols_2d(d2, ids, kk)
-            d2k = np.take_along_axis(d2, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                "vec_id": ids[part].ravel(),
-                "dist": d2k.ravel(),
-            })
-
-    local = (corpus_df.select(id_col, vec_col)
-             .mapInPandas(local_topk, "query_id long, vec_id long, dist double"))
-
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("dist").asc(), F.col("vec_id").asc()))
-    out = (local
-           .withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= k))
+    out = _exact_topk(corpus_df, queries, k, id_col, vec_col,
+                      query_id_col, query_vec_col, "dist", _l2_kernel)
     if not squared:
         out = out.withColumn("dist", F.sqrt(F.col("dist")))
     return out.select("query_id", "vec_id", "dist", "rank")
@@ -116,39 +226,10 @@ def cosine_topk(corpus_df: DataFrame,
                 query_vec_col: str = "embedding") -> DataFrame:
     """Exact top-k by cosine similarity (descending), same batch shape as
     `knn_bruteforce`. Tie-break (sim DESC, vec_id ASC)."""
-    spark = corpus_df.sparkSession
-    qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
-    if len(qids) == 0:
-        return _empty_result(spark, "sim")
-    qnorm = np.linalg.norm(qmat, axis=1) + 1e-12
-    bq = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    def local_topk(batches):
-        qids_l, qmat_l, qnorm_l = bq.value
-        for pdf in batches:
-            if len(pdf) == 0 or qids_l.shape[0] == 0:
-                continue
-            vecs = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vnorm = np.linalg.norm(vecs, axis=1) + 1e-12
-            sim = (qmat_l @ vecs.T) / (qnorm_l[:, None] * vnorm[None, :])
-            kk = min(k, vecs.shape[0])
-            part = topk_cols_2d(sim, ids, kk, descending=True)
-            simk = np.take_along_axis(sim, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                "vec_id": ids[part].ravel(),
-                "sim": simk.ravel(),
-            })
-
-    local = (corpus_df.select(id_col, vec_col)
-             .mapInPandas(local_topk, "query_id long, vec_id long, sim double"))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("sim").desc(), F.col("vec_id").asc()))
-    return (local
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", "sim", "rank"))
+    return _exact_topk(corpus_df, queries, k, id_col, vec_col,
+                       query_id_col, query_vec_col, "sim",
+                       _cosine_kernel, descending=True) \
+        .select("query_id", "vec_id", "sim", "rank")
 
 
 def dot_topk(corpus_df: DataFrame,
@@ -162,38 +243,10 @@ def dot_topk(corpus_df: DataFrame,
     used by unnormalized-embedding retrieval. Same batch shape as
     `knn_bruteforce`: one matmul per (query block, corpus batch), local
     top-k, global windowed top-k. Tie-break (score DESC, vec_id ASC)."""
-    spark = corpus_df.sparkSession
-    qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
-    if len(qids) == 0:
-        return _empty_result(spark, "score")
-    bq = spark.sparkContext.broadcast((qids, qmat))
-
-    def local_topk(batches):
-        qids_l, qmat_l = bq.value
-        for pdf in batches:
-            if len(pdf) == 0 or qids_l.shape[0] == 0:
-                continue
-            vecs = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            score = qmat_l @ vecs.T
-            kk = min(k, vecs.shape[0])
-            part = topk_cols_2d(score, ids, kk, descending=True)
-            sk = np.take_along_axis(score, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                "vec_id": ids[part].ravel(),
-                "score": sk.ravel(),
-            })
-
-    local = (corpus_df.select(id_col, vec_col)
-             .mapInPandas(local_topk,
-                          "query_id long, vec_id long, score double"))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("score").desc(), F.col("vec_id").asc()))
-    return (local
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", "score", "rank"))
+    return _exact_topk(corpus_df, queries, k, id_col, vec_col,
+                       query_id_col, query_vec_col, "score",
+                       _dot_kernel, descending=True) \
+        .select("query_id", "vec_id", "score", "rank")
 
 
 def hard_negatives(corpus_df: DataFrame, queries_df: DataFrame,

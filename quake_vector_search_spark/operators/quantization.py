@@ -341,7 +341,7 @@ def knn_pq(corpus_df: DataFrame, queries, k: int = 10,
     testdata — the brute-force query is the oracle.
     """
     from quake_vector_search_spark.operators.knn import (
-        _collect_queries, _empty_result)
+        _collect_queries, _empty_result, _scan_topk)
 
     spark = corpus_df.sparkSession
     qids, qmat = _collect_queries(queries, "query_id", vec_col)
@@ -351,59 +351,11 @@ def knn_pq(corpus_df: DataFrame, queries, k: int = 10,
     books = pq_train(corpus_df, m=m, ksub=ksub, seed=seed,
                      vec_col=vec_col)
     enc = pq_encode(corpus_df, books, id_col=id_col, vec_col=vec_col)
-    cand = _pq_adc_candidates(enc, books, qids, qmat,
-                              k * oversample, id_col)
+    cand = _scan_topk(enc.select(id_col, "pq_codes"), qids, _adc_kernel,
+                      _pq_luts(qmat, books), k * oversample,
+                      id_col=id_col).select("query_id", id_col)
     return exact_rerank(cand, corpus_df, (qids, qmat), k,
                         id_col=id_col, vec_col=vec_col)
-
-
-def _pq_adc_candidates(enc: DataFrame, books: np.ndarray,
-                       qids: np.ndarray, qmat: np.ndarray,
-                       kk_cand: int, id_col: str) -> DataFrame:
-    """Shared ADC scan: per-query [m, ksub] LUTs broadcast once, every
-    code row scored with m table gathers, per-batch top-kk, global
-    windowed top-kk → (query_id, id) candidate set. ``qmat`` must live
-    in the SAME space the codebooks were trained in (rotated for OPQ)."""
-    import pandas as pd
-
-    from quake_vector_search_spark.functions.vector import (
-        l2_batch, topk_cols_2d)
-
-    spark = enc.sparkSession
-    mm, _ksub, dsub = books.shape
-    luts = np.stack([
-        l2_batch(qmat[:, j * dsub:(j + 1) * dsub], books[j])
-        for j in range(mm)])                                  # [m, nq, ksub]
-    bc = spark.sparkContext.broadcast((qids, luts))
-
-    def adc_topk(batches):
-        qids_l, luts_l = bc.value
-        nq = qids_l.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.vstack(pdf["pq_codes"].to_numpy())     # [n, m]
-            approx = np.zeros((nq, codes.shape[0]))
-            for j in range(luts_l.shape[0]):
-                approx += luts_l[j][:, codes[:, j]]           # [nq, n]
-            kk = min(kk_cand, codes.shape[0])
-            part = topk_cols_2d(approx, ids, kk)
-            d2k = np.take_along_axis(approx, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                id_col: ids[part].ravel(),
-                "dist": d2k.ravel(),
-            })
-
-    local = enc.mapInPandas(adc_topk,
-                            f"query_id long, {id_col} long, dist double")
-    from pyspark.sql import Window
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("dist").asc(), F.col(id_col).asc()))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= kk_cand)
-            .select("query_id", id_col))
 
 
 def knn_opq(corpus_df: DataFrame, queries, k: int = 10,
@@ -429,7 +381,7 @@ def knn_opq(corpus_df: DataFrame, queries, k: int = 10,
     m bytes/vector.
     """
     from quake_vector_search_spark.operators.knn import (
-        _collect_queries, _empty_result)
+        _collect_queries, _empty_result, _scan_topk)
     from quake_vector_search_spark.operators.pca import (
         fit_pca, pca_project)
 
@@ -460,8 +412,9 @@ def knn_opq(corpus_df: DataFrame, queries, k: int = 10,
 
     books = pq_train(rot, m=m, ksub=ksub, seed=seed, vec_col=vec_col)
     enc = pq_encode(rot, books, id_col=id_col, vec_col=vec_col)
-    cand = _pq_adc_candidates(enc, books, qids, qrot,
-                              k * oversample, id_col)
+    cand = _scan_topk(enc.select(id_col, "pq_codes"), qids, _adc_kernel,
+                      _pq_luts(qrot, books), k * oversample,
+                      id_col=id_col).select("query_id", id_col)
     return exact_rerank(cand, corpus_df, (qids, qmat), k,
                         id_col=id_col, vec_col=vec_col)
 
@@ -1938,29 +1891,6 @@ def build_pq_sidecar(index, m: int = 8, ksub: int = 256,
     return out
 
 
-def _topk_superset(vals: np.ndarray, kk: int) -> tuple:
-    """(row, col) of every entry of ``vals`` [nq, n] no larger than its
-    row's kk-th smallest value: ties included, so it holds each row's
-    top-kk under any tie-break — ``_merge_topk`` cuts it to size."""
-    thr = (np.partition(vals, kk - 1, axis=1)[:, kk - 1:kk]
-           if vals.shape[1] > kk else np.inf)
-    return np.nonzero(vals <= thr)
-
-
-def _merge_topk(qids: np.ndarray, ids: np.ndarray, dist: np.ndarray,
-                kk: int) -> tuple:
-    """Each query's top-kk rows of (qids, ids, dist) under the engine's
-    (dist asc, id asc) order — the order of the global candidate
-    window, so merging before it never changes what it keeps."""
-    order = np.lexsort((ids, dist, qids))
-    qids, ids, dist = qids[order], ids[order], dist[order]
-    first = np.r_[True, qids[1:] != qids[:-1]]
-    starts = np.flatnonzero(first)
-    rank = np.arange(len(qids)) - starts[np.cumsum(first) - 1]
-    keep = rank < kk
-    return qids[keep], ids[keep], dist[keep]
-
-
 def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
                max_probe: int = 64, oversample: int = 16,
                books: np.ndarray | None = None,
@@ -2000,11 +1930,8 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
     """
     import os
 
-    from quake_vector_search_spark.functions.vector import l2_batch
-    from quake_vector_search_spark.operators.kmeans import _group_slices
     from quake_vector_search_spark.operators.knn import (
-        _collect_queries, _empty_result)
-    from pyspark.sql import Window
+        _collect_queries, _empty_result, _scan_topk)
 
     if index.metric not in ("l2", "cosine"):
         raise NotImplementedError(
@@ -2018,35 +1945,14 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
         # converted back to similarity at the end
         qmat = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True)
                        + 1e-12)
-    nq = len(qids)
-    if nq == 0:
-        return (_empty_result(spark, "dist"),
-                {"nprobe": [], "avg_nprobe": 0.0, "avg_scanned": 0.0,
-                 "n_partitions": len(index.part_ids)})
+    if len(qids) == 0:
+        return _empty_result(spark, "dist"), index._probe_meta([], {}, 0)
 
-    # same probe-count rule as IVFIndex.search — incl. the calibrated
-    # temperature/cutoff fit when policy="calibrated", and (round 7)
-    # the same two-level ``route_cells`` restriction: the compressed
-    # path serves >10⁵-partition deployments too, where even the full
-    # per-query centroid scan is a cost. A fit's recorded restriction
-    # must match the call's (shared check with search()).
-    if policy == "calibrated":
-        index._check_calibrated_restriction(route_cells,
-                                            caller="knn_ivf_pq")
-    order, probs = index.partition_scores(qmat,
-                                          route_cells=route_cells)
-    nprobe = index._decide_nprobe(probs, target_recall, max_probe,
-                                  policy)
-    probe_map: dict[int, list[int]] = {}
-    scanned = 0
-    for qi in range(nq):
-        pos = order[qi, :nprobe[qi]]
-        scanned += int(index.sizes[pos].sum())
-        for p in index.part_ids[pos]:
-            probe_map.setdefault(int(p), []).append(qi)
-    for pid, qlist in probe_map.items():
-        index.hits[pid] = index.hits.get(pid, 0) + len(qlist)
-    index.query_counter += nq
+    # the same probe plan as IVFIndex.search, incl. the calibrated
+    # rule and the two-level ``route_cells`` restriction
+    nprobe, probe_map, scanned = index._plan_probes(
+        qmat, target_recall, max_probe, policy, route_cells,
+        caller="knn_ivf_pq")
 
     # the sidecar, with only the PROBED cells' per-cell state (local
     # books and rotations, snapshot centroids — round 11: driver memory
@@ -2056,8 +1962,7 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
         raise FileNotFoundError(
             f"no PQ sidecar in {index.version_dir} — build_pq_sidecar "
             "first")
-    residual = bool(meta["residual"])
-    local, sq8 = bool(meta.get("local")), bool(meta.get("sq8"))
+    local = bool(meta.get("local"))
     if books is not None:
         art["local_books" if local else "books"] = books
     # a rotated (OPQ) sidecar carries its rotation next to the
@@ -2066,164 +1971,48 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
     rot = art.get("rotation")
     rot_R = None if rot is None else rot["components"]
     qmat_adc = qmat if rot is None else (qmat - rot["mean"]) @ rot_R.T
-    sq8_params = art.get("sq8")
-    # residual sidecars (IVFADC) quantize x − c_p, so the ADC tables
-    # must come from q − c_p PER PROBED PARTITION — built inside the
-    # kernel (nq_p × ksub × dsub flops per subspace, trivial next to
-    # the code scan). Local (LOPQ) sidecars additionally use the
-    # probed PARTITION'S OWN codebooks for those tables; only the
-    # probed partitions' books ride the broadcast.
-    local_rots = None
-    if sq8:
-        mm = dsub = None          # no sub-codes: codes are per-dim
-    elif local:
-        books = art["local_books"]
-        _any = next(iter(books.values()))
-        mm, dsub = _any.shape[0], _any.shape[2]
-        books = {p: b for p, b in books.items() if p in probe_map}
-        # full-LOPQ sidecar: the probed cell's own rotation must be
-        # applied to q − c_p before the LUT build (codes live in the
-        # per-cell rotated space); only probed cells' rotations ride
-        local_rots = art["local_rots"]
-        if local_rots is not None:
-            local_rots = {p: r for p, r in local_rots.items()
-                          if p in probe_map}
-    else:
-        books = art["books"]
-        mm, ksub_eff, dsub = books.shape
-    if residual:
-        # LUTs must use the ENCODE-TIME centroids (snapshot persisted
-        # by the sidecar build), not the live ones DML has drifted;
-        # partitions created after the snapshot use their live one
+    if meta["residual"]:
+        # residual sidecars (IVFADC) quantize x − c_p, so the ADC
+        # tables come from q − c_p PER PROBED PARTITION, built inside
+        # the kernel against the ENCODE-TIME centroids (the snapshot,
+        # not the live ones DML has drifted; partitions created after
+        # it use their live one). Only probed cells' state rides the
+        # broadcast.
         snap = art["snapshot"]
-        cent_by_pid = {int(p): snap.get(int(p),
-                                        index.centroids[i]).copy()
-                       for i, p in enumerate(index.part_ids)
-                       if int(p) in probe_map}
+        cents = {int(p): snap.get(int(p), index.centroids[i])
+                 for i, p in enumerate(index.part_ids)
+                 if int(p) in probe_map}
         if rot_R is not None:
-            # rotated-residual (OPQ→IVF→ADC) sidecar: codes live in
+            # rotated-residual (OPQ→IVF→ADC): codes live in
             # ((x − c_p) − mean) @ Rᵀ space; qmat_adc already carries
             # (q − mean) @ Rᵀ, so rotating the centroids LINEARLY puts
             # q_rot − c_rot exactly in the encode space
-            cent_by_pid = {p: c @ rot_R.T
-                           for p, c in cent_by_pid.items()}
-        bc = spark.sparkContext.broadcast(
-            (qids, qmat_adc, probe_map, books, cent_by_pid,
-             local_rots, sq8_params))
+            cents = {p: c @ rot_R.T for p, c in cents.items()}
+        bks, rots = art.get("books"), None
+        if local:
+            bks = {p: b for p, b in art["local_books"].items()
+                   if p in probe_map}
+            rots = art["local_rots"] and {
+                p: r for p, r in art["local_rots"].items()
+                if p in probe_map}
+        kernel = _residual_adc_kernel
+        state = (qmat_adc, bks, cents, rots, art.get("sq8"))
     else:
-        luts = np.stack([
-            l2_batch(qmat_adc[:, j * dsub:(j + 1) * dsub], books[j])
-            for j in range(mm)])
-        bc = spark.sparkContext.broadcast((qids, luts, probe_map))
-    kk_cand = k * oversample
+        kernel, state = _adc_kernel, _pq_luts(qmat_adc, art["books"])
     id_col = index.id_col
-
     ids_sql = ",".join(str(p) for p in sorted(probe_map))
     codes = (spark.read.parquet(os.path.join(index.version_dir, "pq"))
-             .where(F.expr(f"partition_id IN ({ids_sql})")))
-    if allowed is not None:
-        # filtered hybrid search: the predicate's id set prunes the
-        # CODES scan itself (broadcast semi-join ahead of the ADC
-        # kernel), so disallowed vectors never enter candidate
-        # generation — same pre-filter pattern as IVFIndex.search
-        if len(allowed.columns) != 1:
-            raise ValueError(
-                f"knn_ivf_pq(allowed=...): expected a single-column "
-                f"id DataFrame, got columns {allowed.columns}")
-        codes = codes.join(
-            F.broadcast(allowed.select(
-                F.col(allowed.columns[0]).alias(id_col))),
-            id_col, "semi")
-
-    # one task per ROWS_PER_TASK probed rows, like search()'s scan
-    codes = index._coalesce_probed(codes, probe_map)
-
-    def adc_topk(batches):
-        import pyarrow as pa
-
-        if residual:
-            (qids_l, qmat_l, pmap, books_l, cents_l,
-             rots_l, sq8_l) = bc.value
-        else:
-            qids_l, luts_l, pmap = bc.value
-        # this task's running top-kk_cand per query, merged after
-        # every batch: the global window then sees nq × tasks × kk_cand
-        # rows instead of one block per (batch, partition)
-        best = (np.empty(0, np.int64), np.empty(0, np.int64),
-                np.empty(0, np.float64))
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            pids = rb.column("partition_id").to_numpy(
-                zero_copy_only=False)
-            # codes from the list's flat values buffer, in the stored
-            # integer dtype — no per-row objects
-            all_codes = (rb.column("pq_codes").flatten()
-                         .to_numpy(zero_copy_only=False)
-                         .reshape(rb.num_rows, -1))
-            all_ids = rb.column(id_col).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            out = [best]
-            gidx, starts, ends, uniq = _group_slices(pids)
-            for pid, lo, hi in zip(uniq, starts, ends):
-                qidx = pmap.get(int(pid))
-                if not qidx:
-                    continue
-                rows = gidx[lo:hi]
-                cds, ids = all_codes[rows], all_ids[rows]
-                approx = np.zeros((len(qidx), cds.shape[0]))
-                if residual:
-                    qres = qmat_l[qidx] - cents_l[int(pid)]
-                    if sq8:
-                        # scalar quantizer: decode codes to residual
-                        # vectors (one multiply-add per dim) and take
-                        # exact squared L2 against q − c_p — no LUTs,
-                        # no codebooks
-                        dec = (cds * sq8_l["scale"]
-                               + sq8_l["vmin"])
-                        approx = l2_batch(qres, dec)
-                    else:
-                        # local sidecar: this partition's own books
-                        bk = (books_l.get(int(pid)) if local
-                              else books_l)
-                        if bk is None:
-                            continue
-                        rot = (rots_l.get(int(pid))
-                               if local and rots_l else None)
-                        if rot is not None:
-                            # full LOPQ: codes live in THIS cell's
-                            # rotated space
-                            qres = ((qres - rot["mean"])
-                                    @ rot["components"].T)
-                        for j in range(bk.shape[0]):
-                            lut_j = l2_batch(
-                                qres[:, j * dsub:(j + 1) * dsub],
-                                bk[j])
-                            approx += lut_j[:, cds[:, j]]
-                else:
-                    for j in range(luts_l.shape[0]):
-                        approx += luts_l[j][np.ix_(qidx, cds[:, j])]
-                r, c = _topk_superset(approx, kk_cand)
-                out.append((qids_l[qidx][r], ids[c], approx[r, c]))
-            if len(out) > 1:
-                best = _merge_topk(*(np.concatenate(col)
-                                     for col in zip(*out)), kk_cand)
-        if len(best[0]):
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(col) for col in best],
-                ["query_id", id_col, "dist"])
-
-    # NOTE: must not reuse the name `local` here — adc_topk's closure
-    # reads the `local` FLAG, and cloudpickle captures the cell at
-    # pickle time; shadowing it with a DataFrame is a landmine
-    approx_scores = codes.mapInArrow(
-        adc_topk, f"query_id long, {id_col} long, dist double")
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("dist").asc(), F.col(id_col).asc()))
-    cand = (approx_scores.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= kk_cand)
-            .select("query_id", id_col))
-    out = exact_rerank(cand, index.read_corpus(), (qids, qmat), k,
+             .where(F.expr(f"partition_id IN ({ids_sql})"))
+             .select(id_col, "pq_codes", "partition_id"))
+    # filtered hybrid search: the id set prunes the CODES scan itself,
+    # so disallowed vectors never enter candidate generation; one
+    # task per ROWS_PER_TASK probed rows, like search()'s scan
+    codes = index._coalesce_probed(
+        index._semi_allowed(codes, allowed, "knn_ivf_pq"), probe_map)
+    cand = _scan_topk(codes, qids, kernel, state, k * oversample,
+                      id_col=id_col, probe_map=probe_map)
+    out = exact_rerank(cand.select("query_id", id_col),
+                       index.read_corpus(), (qids, qmat), k,
                        id_col=id_col, vec_col=index.vec_col)
     if index.metric == "cosine":
         # unit vectors: dist² = 2 - 2·cos → cos = 1 - dist²/2; rank by
@@ -2231,13 +2020,54 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
         out = (out.withColumn(
             "sim", 1 - (F.col("dist") * F.col("dist")) / 2)
             .select("query_id", id_col, "sim", "rank"))
-    meta = {
-        "nprobe": nprobe.tolist(),
-        "avg_nprobe": float(nprobe.mean()),
-        "avg_scanned": scanned / nq,
-        "n_partitions": len(index.part_ids),
-    }
-    return out, meta
+    return out, index._probe_meta(nprobe, probe_map, scanned)
+
+
+def _pq_luts(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """[m, nq, ksub] squared-L2 ADC tables of ``qmat`` against PQ
+    codebooks [m, ksub, dsub]."""
+    from quake_vector_search_spark.functions.vector import l2_batch
+
+    dsub = books.shape[2]
+    return np.stack([l2_batch(qmat[:, j * dsub:(j + 1) * dsub], books[j])
+                     for j in range(books.shape[0])])
+
+
+def _adc_kernel(luts, codes, qpos, pid):
+    """ADC scores for ``_scan_topk``: per query, the sum over subspaces
+    of its table entry at each row's code."""
+    lq = luts[:, qpos]
+    approx = np.zeros((lq.shape[1], codes.shape[0]))
+    for j in range(lq.shape[0]):
+        approx += lq[j][:, codes[:, j]]
+    yield approx
+
+
+def _residual_adc_kernel(state, codes, qpos, pid):
+    """Residual ADC scores for ``_scan_topk``: tables from q − c_p of
+    the probed partition — its own books (and rotation) for a local
+    sidecar; an SQ8 sidecar decodes the codes to residuals instead."""
+    from quake_vector_search_spark.functions.vector import l2_batch
+
+    qmat, books, cents, rots, sq8 = state
+    qres = qmat[qpos] - cents[pid]
+    if sq8 is not None:
+        # one multiply-add per dim, exact squared L2 against q − c_p
+        yield l2_batch(qres, codes * sq8["scale"] + sq8["vmin"])
+        return
+    bk = books.get(pid) if isinstance(books, dict) else books
+    if bk is None:
+        return
+    rot = rots.get(pid) if rots else None
+    if rot is not None:
+        # full LOPQ: codes live in THIS cell's rotated space
+        qres = (qres - rot["mean"]) @ rot["components"].T
+    dsub = bk.shape[2]
+    approx = np.zeros((qres.shape[0], codes.shape[0]))
+    for j in range(bk.shape[0]):
+        approx += l2_batch(qres[:, j * dsub:(j + 1) * dsub],
+                           bk[j])[:, codes[:, j]]
+    yield approx
 
 
 def refresh_pq_sidecar(index, books: np.ndarray | None = None,
@@ -2349,11 +2179,12 @@ def knn_bq(corpus_df: DataFrame, queries, k: int = 10,
 
     1. encode the corpus to sign codes (narrow, codegen, no training),
     2. prerank by hamming distance code⊕query-code — packed uint64
-       XOR + byte-LUT popcount in NumPy inside mapInPandas, with
-       per-batch local top-(k·oversample) under the engine tie-break
-       (ham asc, id asc), exactly like ``_pq_adc_candidates``' ADC
-       scan; the global window then ranks only the ≤ partitions·k·
-       oversample survivors per query,
+       XOR + byte-LUT popcount in NumPy (``_hamming_kernel``) on the
+       shared top-k scan (``knn._scan_topk``), like the PQ ADC: each
+       task merges its Arrow batches into one top-(k·oversample) per
+       query under the engine tie-break (ham asc, id asc); the global
+       window then ranks only the ≤ tasks·k·oversample survivors per
+       query,
     3. exact rerank of the top-(k·oversample) per query.
 
     Scale note (VERDICT r7): the previous shape windowed ALL n·nq
@@ -2367,14 +2198,8 @@ def knn_bq(corpus_df: DataFrame, queries, k: int = 10,
     hamming-on-signs is the coarsest prerank in the family, so it
     needs the largest candidate fraction — the price of 1-bit codes.
     """
-    import numpy as np
-    import pandas as pd
-
-    from quake_vector_search_spark.functions.vector import topk_cols_2d
     from quake_vector_search_spark.operators.knn import (
-        _collect_queries,
-        _empty_result,
-    )
+        _collect_queries, _empty_result, _scan_topk)
 
     spark = corpus_df.sparkSession
     qids, qmat = _collect_queries(queries, "query_id", vec_col)
@@ -2396,61 +2221,32 @@ def knn_bq(corpus_df: DataFrame, queries, k: int = 10,
             ws.append(acc - (1 << 64) if acc >= (1 << 63) else acc)
         qcodes.append(ws)
     qwords = np.asarray(qcodes, dtype=np.int64).view(np.uint64)
-    qids64 = np.asarray(qids, dtype=np.int64)
-    kk_cand = k * oversample
-    bc = spark.sparkContext.broadcast((qids64, qwords))
-    popcnt = np.array([bin(i).count("1") for i in range(256)],
-                      dtype=np.uint8)
-
     enc = bq_encode(corpus_df, id_col=id_col, vec_col=vec_col, dim=dim)
+    cand = _scan_topk(enc.select(id_col, "bq_code"), qids, _hamming_kernel,
+                      qwords, k * oversample, id_col=id_col)
+    return exact_rerank(cand.select("query_id", id_col), corpus_df,
+                        (qids, qmat), k, id_col=id_col, vec_col=vec_col)
 
-    def hamming_topk(batches):
-        qids_l, qw = bc.value          # [nq, nwords] uint64
-        nq = qids_l.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.vstack(pdf["bq_code"].to_numpy()) \
-                .astype(np.int64).view(np.uint64)          # [n, nwords]
-            # XOR every code against every query code, popcount via a
-            # 256-entry byte LUT (numpy<2 has no bitwise_count), sum
-            # the 8·nwords bytes. Both the LUT gather AND the hamming
-            # matrix + top-k run per ≤64-query block (ADVICE r8: a
-            # full [nq, n] int64 matrix is multi-GB at 100k+ collected
-            # queries), so peak extra memory is the block's
-            # 64·n·nwords·64 B ≈ 40 MB at default Arrow batch sizes,
-            # independent of the collected query-set size. Per-block
-            # top-k selects the same rows as whole-matrix top-k —
-            # selection is per query row.
-            kk = min(kk_cand, len(ids))
-            out_q, out_i, out_h = [], [], []
-            for q0 in range(0, nq, 64):
-                x = qw[q0:q0 + 64, None, :] ^ codes[None, :, :]
-                ham = popcnt[x.view(np.uint8)].reshape(
-                    x.shape[0], len(ids), -1).sum(axis=2,
-                                                  dtype=np.int64)
-                part = topk_cols_2d(ham, ids, kk)
-                hk = np.take_along_axis(ham, part, axis=1)
-                out_q.append(np.repeat(qids_l[q0:q0 + 64], kk))
-                out_i.append(ids[part].ravel())
-                out_h.append(hk.ravel())
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                id_col: np.concatenate(out_i),
-                "_ham": np.concatenate(out_h),
-            })
 
-    local = enc.mapInPandas(
-        hamming_topk, f"query_id long, {id_col} long, _ham long")
-    from pyspark.sql import Window
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("_ham").asc(), F.col(id_col).asc()))
-    cand = (local.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= kk_cand)
-            .select("query_id", id_col))
-    return exact_rerank(cand, corpus_df, (qids, qmat), k,
-                        id_col=id_col, vec_col=vec_col)
+_POPCOUNT = np.array([bin(i).count("1") for i in range(256)],
+                     dtype=np.uint8)
+
+
+def _hamming_kernel(qwords, codes, qpos, pid):
+    """Hamming distances code ⊕ query code for ``_scan_topk``: packed
+    uint64 XOR, popcount via a 256-entry byte LUT (numpy<2 has no
+    bitwise_count), summed over the 8·nwords bytes. The LUT gather and
+    the hamming block run per ≤64-query block (ADVICE r8: a full
+    [nq, n] int64 matrix is multi-GB at 100k+ collected queries), so
+    peak extra memory is the block's 64·n·nwords·64 B ≈ 40 MB at
+    default Arrow batch sizes, independent of the collected query-set
+    size; per-block top-k selects the same rows as whole-matrix top-k —
+    selection is per query row."""
+    qw, codes = qwords[qpos], codes.view(np.uint64)
+    for q0 in range(0, len(qw), 64):
+        x = qw[q0:q0 + 64, None, :] ^ codes[None, :, :]
+        yield _POPCOUNT[x.view(np.uint8)].reshape(
+            x.shape[0], len(codes), -1).sum(axis=2, dtype=np.int64)
 
 
 # ------------------------------------------- anisotropic (score-aware) PQ
@@ -3313,8 +3109,10 @@ def knn_pq_mips(corpus_df: DataFrame, queries, k: int = 10,
     2. encode the corpus with score-aware coordinate descent (one
        Arrow-batched pass),
     3. ADC: per-query [m, ksub] INNER-PRODUCT LUTs, every code row
-       scored with m gathers, per-batch local top-(k·oversample)
-       under (score desc, id asc), global window over the survivors,
+       scored with m gathers on the shared top-k scan
+       (``knn._scan_topk``): one merged top-(k·oversample) per query
+       per task under (score desc, id asc), global window over the
+       survivors,
     4. exact dot-product rerank of the candidates.
 
     Same plan shape as ``knn_pq`` — no full-corpus window, no
@@ -3324,11 +3122,8 @@ def knn_pq_mips(corpus_df: DataFrame, queries, k: int = 10,
     from a prior ``aniso_pq_train`` (with the SAME eta — assignment
     and training share the loss) to amortize training across query
     batches."""
-    from quake_vector_search_spark.functions.vector import topk_cols_2d
     from quake_vector_search_spark.operators.knn import (
-        _collect_queries,
-        _empty_result,
-    )
+        _collect_queries, _empty_result, _scan_topk)
 
     spark = corpus_df.sparkSession
     qids, qmat = _collect_queries(queries, "query_id", vec_col)
@@ -3339,42 +3134,16 @@ def knn_pq_mips(corpus_df: DataFrame, queries, k: int = 10,
                                seed=seed, vec_col=vec_col)
     enc = aniso_pq_encode(corpus_df, books, eta=eta, id_col=id_col,
                           vec_col=vec_col)
-    mm, _ksub, dsub = books.shape
-    luts = np.stack([
-        qmat[:, j * dsub:(j + 1) * dsub] @ books[j].T
-        for j in range(mm)])                        # [m, nq, ksub]
-    bc = spark.sparkContext.broadcast(
-        (np.asarray(qids, dtype=np.int64), luts))
-    kk_cand = k * oversample
-
-    def adc_topk(batches):
-        qids_l, luts_l = bc.value
-        nq = qids_l.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.vstack(pdf["pq_codes"].to_numpy())
-            approx = np.zeros((nq, codes.shape[0]))
-            for j in range(luts_l.shape[0]):
-                approx += luts_l[j][:, codes[:, j]]
-            kk = min(kk_cand, codes.shape[0])
-            part = topk_cols_2d(approx, ids, kk, descending=True)
-            sk = np.take_along_axis(approx, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                id_col: ids[part].ravel(),
-                "score": sk.ravel()})
-
-    local = enc.mapInPandas(
-        adc_topk, f"query_id long, {id_col} long, score double")
-    from pyspark.sql import Window
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("score").desc(), F.col(id_col).asc()))
-    cand = (local.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= kk_cand)
+    dsub = books.shape[2]
+    luts = np.stack([qmat[:, j * dsub:(j + 1) * dsub] @ books[j].T
+                     for j in range(books.shape[0])])   # [m, nq, ksub]
+    cand = (_scan_topk(enc.select(id_col, "pq_codes"), qids, _adc_kernel,
+                       luts, k * oversample, id_col=id_col,
+                       score_col="score", descending=True)
             .select("query_id", id_col))
     # exact MIPS rerank over the candidate-bounded set
+    from pyspark.sql import Window
+
     from quake_vector_search_spark.functions.vector import dot_col
     full = corpus_df.select(F.col(id_col), F.col(vec_col).alias("_fv"))
     qdf = spark.createDataFrame(pd.DataFrame({

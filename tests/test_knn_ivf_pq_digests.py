@@ -133,11 +133,13 @@ def test_knn_ivf_pq_golden_digest(spark, tmp_path, case):
 
 
 def test_candidate_selection_matches_reference():
-    """The ADC's per-partition candidate superset plus the task-local
+    """The scan's per-block candidate superset plus the task-local
     merge keep exactly each query's top-kk under (dist asc, id asc):
-    against a sorted reference and against ``topk_cols_2d``."""
+    against a sorted reference and against ``topk_cols_2d``. Negated
+    scores through the same two steps give the descending order
+    (score desc, id asc) of ``topk_cols_2d(..., descending=True)``."""
     from quake_vector_search_spark.functions.vector import topk_cols_2d
-    from quake_vector_search_spark.operators.quantization import (
+    from quake_vector_search_spark.operators.knn import (
         _merge_topk, _topk_superset)
 
     rng = np.random.default_rng(11)
@@ -155,14 +157,18 @@ def test_candidate_selection_matches_reference():
     vals = rng.integers(0, 6, (5, 40)).astype(np.float64)  # many ties
     ids = ids[:40]
     qids = np.arange(5, dtype=np.int64) * 10
-    for kk in (1, 7, 40, 60):
-        r, c = _topk_superset(vals, kk)
-        got = _merge_topk(qids[r], ids[c], vals[r, c], kk)
-        part = topk_cols_2d(vals, ids, min(kk, 40))
-        want = (np.repeat(qids, part.shape[1]), ids[part].ravel(),
-                np.take_along_axis(vals, part, axis=1).ravel())
-        for g, w in zip(got, want):
-            np.testing.assert_array_equal(g, w)
+    for descending in (False, True):
+        sign = -1.0 if descending else 1.0
+        for kk in (1, 7, 40, 60):
+            r, c = _topk_superset(sign * vals, kk)
+            gq, gi, gs = _merge_topk(qids[r], ids[c], sign * vals[r, c],
+                                     kk)
+            part = topk_cols_2d(vals, ids, min(kk, 40),
+                                descending=descending)
+            want = (np.repeat(qids, part.shape[1]), ids[part].ravel(),
+                    np.take_along_axis(vals, part, axis=1).ravel())
+            for g, w in zip((gq, gi, sign * gs), want):
+                np.testing.assert_array_equal(g, w)
 
 
 def _stage_tasks(spark, group: str, action):

@@ -12,6 +12,11 @@ to one digest. The digests in ``tests/data/topk_digests.json`` pin the
 candidate stage bit for bit: a change to a scan, a kernel or a merge
 that moves one row or one score fails here.
 
+Two more tests: ``search`` on several scan tasks returns the rows of
+the one-task run, in ⌈probed rows / ``ROWS_PER_TASK``⌉ tasks; and a
+``search`` or ``knn_ivf_pq`` call refused on its arguments or a
+missing sidecar records no partition hits.
+
 Regenerate (only when a result change is intended):
     python tests/test_topk_digests.py --write
 """
@@ -168,6 +173,80 @@ def test_topk_golden_digest(spark, tmp_path, case):
     with open(DIGESTS) as fh:
         want = json.load(fh)[case]
     assert _case_digest(spark, str(tmp_path), case) == want
+
+
+def _index(spark, workdir: str):
+    from quake_vector_search_spark.operators.ivf import IVFIndex
+
+    corpus, _, _, qids, qmat = _data(spark)
+    idx = IVFIndex.build(corpus, workdir, coarse_k=3, base_k=2)
+    return idx, (qids, qmat)
+
+
+def test_search_multi_task_merge_equals_one_task(spark, tmp_path,
+                                                 monkeypatch):
+    """The search scan runs ⌈probed rows / ROWS_PER_TASK⌉ tasks, each
+    merging its partitions' candidates into every query's top-k; the
+    rows do not depend on how many tasks ran."""
+    from collections import Counter
+
+    from quake_vector_search_spark.operators import ivf
+    from test_knn_ivf_pq_digests import _stage_tasks
+
+    with pinned_conf(spark):
+        idx, queries = _index(spark, str(tmp_path / "ivf"))
+
+        def run(rows_per_task, group):
+            monkeypatch.setattr(ivf, "ROWS_PER_TASK", rows_per_task)
+            df, _ = idx.search(queries, k=K, target_recall=0.9)
+            return _stage_tasks(spark, group,
+                                lambda: sorted(df.collect()))
+
+        one, _ = run(10 ** 9, "search-one")
+        _, probe_map, _ = idx._plan_probes(queries[1], 0.9, 64,
+                                           "reference", None)
+        est = int(sum(int(s) for p, s in zip(idx.part_ids, idx.sizes)
+                      if int(p) in probe_map))
+        rows_per_task = -(-est // 3)
+        want = -(-est // rows_per_task)
+        assert want == 3 < len(probe_map)
+        two, tasks_2 = run(-(-est // 2), "search-two")
+        many, tasks_n = run(rows_per_task, "search-many")
+    assert many == two == one
+    # a one-task scan also drops the window's shuffle, so the stage
+    # counts are compared between the two- and the many-task runs,
+    # which differ only in the scan stage
+    twos, manys = Counter(tasks_2), Counter(tasks_n)
+    assert (twos - manys, manys - twos) == ({2: 1}, {want: 1})
+
+
+def test_refused_call_records_no_hits(spark, tmp_path):
+    """Partition hits drive maintenance's split choice, so only served
+    calls count: a two-column ``allowed`` (search and knn_ivf_pq) and a
+    version without a PQ sidecar (knn_ivf_pq) raise and leave
+    ``hits`` and ``query_counter`` as they were."""
+    from quake_vector_search_spark.operators.quantization import (
+        build_pq_sidecar, knn_ivf_pq)
+
+    idx, queries = _index(spark, str(tmp_path / "ivf"))
+    two_cols = idx.read_corpus().select("vec_id", "partition_id")
+
+    def unchanged(call, exc):
+        before = (dict(idx.hits), idx.query_counter)
+        with pytest.raises(exc):
+            call()
+        assert (dict(idx.hits), idx.query_counter) == before
+
+    unchanged(lambda: idx.search(queries, k=K, allowed=two_cols),
+              ValueError)
+    unchanged(lambda: knn_ivf_pq(idx, queries, k=K), FileNotFoundError)
+    build_pq_sidecar(idx, m=4, ksub=16, seed=7)
+    unchanged(lambda: knn_ivf_pq(idx, queries, k=K, allowed=two_cols),
+              ValueError)
+    # a served call does count
+    _, meta = knn_ivf_pq(idx, queries, k=K)
+    assert idx.query_counter == NQ
+    assert sum(idx.hits.values()) == sum(meta["nprobe"])
 
 
 if __name__ == "__main__":
