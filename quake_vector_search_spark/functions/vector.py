@@ -9,7 +9,8 @@ Two tiers, mirroring the reference's design (SURVEY.md §2.1 O1/O2):
   adaptive_ivf.mjs:23-30.
 
 - **NumPy batch kernel** (`l2_batch`): the `x²+y²-2xyᵀ` matmul trick for
-  all-pairs distances, used inside Arrow-backed `mapInPandas` operators.
+  all-pairs distances, used inside Arrow-batched operators (the kNN
+  operators' shared top-k scan, `operators/knn.py::_scan_topk`).
   Reference: ``l2_batch`` at ipynb c1:11-14 / adaptive_ivf.mjs:32-40.
   This is the hot path for kNN — one BLAS matmul per (partition,
   query-block) instead of a crossJoin, so the shuffle carries only local

@@ -106,7 +106,8 @@ def _scan_topk(df: DataFrame, qids: np.ndarray, kernel, state, kk: int,
     once. With a ``probe_map`` ({partition id: query positions}) the
     rows of a batch are grouped by partition id, each group scored
     against the queries probing it; without one, the whole batch is
-    one group scored against every query (positions ``slice(None)``).
+    one group scored against every query (rows and positions
+    ``slice(None)``, so the kernel sees views of the full arrays).
     ``kernel(state, payload, positions, partition id)`` yields score
     blocks whose rows are consecutive runs of those query positions,
     in order. Every block goes through ``_topk_superset``; each task
@@ -131,7 +132,7 @@ def _scan_topk(df: DataFrame, qids: np.ndarray, kernel, state, kk: int,
                 .astype(np.int64)
             x = _payload_matrix(rb.column(1))
             if pmap is None:
-                groups = [(None, None, slice(None))]
+                groups = [(None, slice(None), slice(None))]
             else:
                 gidx, starts, ends, uniq = _group_slices(
                     rb.column(2).to_numpy(zero_copy_only=False))
@@ -141,10 +142,8 @@ def _scan_topk(df: DataFrame, qids: np.ndarray, kernel, state, kk: int,
             for pid, rows, qpos in groups:
                 if qpos is None:
                     continue
-                xs, gids = (x, ids) if rows is None else (x[rows],
-                                                          ids[rows])
-                qsel, q0 = qids_l[qpos], 0
-                for block in kernel(st, xs, qpos, pid):
+                gids, qsel, q0 = ids[rows], qids_l[qpos], 0
+                for block in kernel(st, x[rows], qpos, pid):
                     if descending:
                         block = -block
                     r, c = _topk_superset(block, kk)
@@ -263,7 +262,7 @@ def hard_negatives(corpus_df: DataFrame, queries_df: DataFrame,
     Shape: one `knn_bruteforce` branch per DISTINCT query label over
     the corpus filtered to `label != L` — the per-query predicate
     becomes a per-branch static filter, so each branch keeps the
-    broadcast-queries + per-partition local-top-k + single tiny
+    broadcast-queries + per-task merged top-k + single tiny
     shuffle plan, and the label filter pushes into the corpus scan.
     Branch count is the query-label cardinality (bounded by the label
     vocabulary, not the query count); the union is plan-level, not a

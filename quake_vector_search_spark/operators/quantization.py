@@ -1992,9 +1992,8 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
         if local:
             bks = {p: b for p, b in art["local_books"].items()
                    if p in probe_map}
-            rots = art["local_rots"] and {
-                p: r for p, r in art["local_rots"].items()
-                if p in probe_map}
+            rots = {p: r for p, r in (art["local_rots"] or {}).items()
+                    if p in probe_map}
         kernel = _residual_adc_kernel
         state = (qmat_adc, bks, cents, rots, art.get("sq8"))
     else:
